@@ -84,14 +84,17 @@ def main():
     post = idx["postings"].withColumn(
         "term_bucket", F.pmod(F.xxhash64("term"), F.lit(B.N_TERM_BUCKETS))
     )
-    if "repartition(n_buckets" in inspect.getsource(B.write_index):
+    repartitioned = "repartition(N_TERM_BUCKETS" in inspect.getsource(
+        B.write_index
+    )
+    if repartitioned:
         post = post.repartition(B.N_TERM_BUCKETS, "term_bucket")
     dump("postings_write_input", post)
 
     td = idx["term_dict"].withColumn(
         "term_bucket", F.pmod(F.xxhash64("term"), F.lit(B.N_TERM_BUCKETS))
     )
-    if "repartition(n_buckets" in inspect.getsource(B.write_index):
+    if repartitioned:
         td = td.repartition(B.N_TERM_BUCKETS, "term_bucket")
     dump("term_dict_write_input", td)
 

@@ -1,6 +1,6 @@
 """Round-6 pass-3 probe: wand_topk_batch cold cost with the driver-local
-idf/stats fetch (wand._pyarrow_term_dict / _index_stats) vs the Spark
-crossJoin collect.  Interleaved best-of-3, result identity asserted.
+idf/stats fetch (wand._arrow_read, then _pyarrow_term_dict / _index_stats)
+vs the Spark crossJoin collect.  Interleaved best-of-3, result identity asserted.
 NOT part of the driver bench contract.
 """
 from __future__ import annotations

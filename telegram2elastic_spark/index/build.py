@@ -20,7 +20,7 @@ At 10^12 docs: the only wide op is the (term, doc_id) aggregation + the
 repartition by (term, salt); both are hash shuffles whose key-space is huge
 (no single reducer hotspot once salted), and AQE skew handling covers the
 residual.  Postings are written partitioned by term_bucket =
-pmod(xxhash64(term), n_buckets) so a k-term query prunes to <= k buckets.
+pmod(xxhash64(term), N_TERM_BUCKETS) so a k-term query prunes to <= k buckets.
 """
 
 from __future__ import annotations
@@ -426,11 +426,10 @@ N_TERM_BUCKETS = 64
 def write_index(
     index: dict,
     out_dir: str,
-    n_buckets: int = N_TERM_BUCKETS,
     timings: dict | None = None,
 ) -> None:
     """Persist index tables as parquet; postings partitioned by term_bucket
-    (pmod(xxhash64(term), n_buckets)) so query-time scans prune to the
+    (pmod(xxhash64(term), N_TERM_BUCKETS)) so query-time scans prune to the
     buckets of the query's terms — the analogue of the reference's per-day
     ES index routing (output/elasticsearch.py:10,33), keyed by term instead
     of time because queries arrive by term.
@@ -475,14 +474,16 @@ def write_index(
     # it touches (~tasks x buckets small files — measured 439 files and
     # +0.9 s on postings at bench scale); aligned, each bucket is written
     # by exactly one task (guide §6 small-files).  Write parallelism is
-    # then n_buckets, which is the knob that grows with the cluster.
+    # then N_TERM_BUCKETS: a fixed layout constant, because every query
+    # route prunes with the same constant (query/wand.py _term_buckets)
+    # and a different count would silently drop terms.
     def _w_term_dict():
         (
             index["term_dict"]
             .withColumn(
-                "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets))
+                "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS))
             )
-            .repartition(n_buckets, "term_bucket")
+            .repartition(N_TERM_BUCKETS, "term_bucket")
             .write.mode("overwrite")
             .partitionBy("term_bucket")
             .parquet(f"{out_dir}/term_dict")
@@ -508,9 +509,9 @@ def write_index(
         (
             index["postings"]
             .withColumn(
-                "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets))
+                "term_bucket", F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS))
             )
-            .repartition(n_buckets, "term_bucket")
+            .repartition(N_TERM_BUCKETS, "term_bucket")
             .write.mode("overwrite")
             .partitionBy("term_bucket")
             .parquet(f"{out_dir}/postings")
@@ -686,10 +687,10 @@ def read_index(spark, out_dir: str) -> dict:
     except Exception:
         pass
     out["_dir"] = out_dir
-    # driver-local reads (query/wand.py _pyarrow_blocks / _collect_idfs /
-    # _index_stats): valid only while the corresponding table mirrors its
-    # directory — consumers that swap a frame (maintenance.resize_index
-    # for postings) must drop the matching seam
+    # driver-local reads (query/wand.py _arrow_read): valid only while
+    # the corresponding table mirrors its directory — consumers that swap
+    # a frame (maintenance.resize_index for postings) must drop the
+    # matching seam
     out["_postings_dir"] = f"{out_dir}/postings"
     out["_term_dict_dir"] = f"{out_dir}/term_dict"
     out["_stats_dir"] = f"{out_dir}/stats"

@@ -66,7 +66,7 @@ def update_by_query(
     out = dict(index)
     out["doc_map"] = dm.select(*cols)
     # the updated view's doc_map no longer mirrors the written directory —
-    # drop the driver-local url-fill seam (query/wand.py _pyarrow_doc_urls)
+    # drop the driver-local url-fill seam (query/wand.py _arrow_read)
     for k in ("_doc_map_dir", "_dm_ds"):
         out.pop(k, None)
     return out

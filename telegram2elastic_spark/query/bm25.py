@@ -21,6 +21,9 @@ broadcast joins for df/stats -> top-k.  The compressed-index WAND path
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -76,12 +79,70 @@ SCORE_DECIMALS = 5
 ROUND_GUARD = 1.1 * 10 ** (-SCORE_DECIMALS)
 
 
+#: the tie band: a doc whose score trails the k-th by more than this
+#: rounds strictly below k others and can never win a place (scaled by
+#: 1/idf_lb when the idf is applied after the cut).
+TIE_BAND = 2.0 * 10.0 ** (-SCORE_DECIMALS) + ROUND_GUARD
+
+
 def idf_col(n: F.Column, df: F.Column) -> F.Column:
     return F.log(F.lit(1.0) + (n - df + 0.5) / (df + 0.5))
 
 
-def bm25_weight(tf: F.Column, dl: F.Column, avgdl: F.Column, idf: F.Column) -> F.Column:
+def idf(n, df):
+    """numpy form of idf_col (scalars or arrays, same float order)."""
+    return np.log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+
+def bm25_weight(tf, dl, avgdl, idf):
+    """w(t, d) over Columns or numpy arrays alike — one expression, so
+    every path sums the same float operations in the same order."""
     return idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+
+
+def tf_saturation(tf, dl, avgdl):
+    """The idf-free factor of w(t, d).  Callers that apply the idf AFTER
+    it (idf * tf_saturation: pseudo-terms, synonym groups, terms_set) get
+    a different last-ulp float order than bm25_weight, so both forms
+    exist; SCORE_DECIMALS rounding absorbs the difference."""
+    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+
+
+def upper_bound(idf, max_tf):
+    """w's dl -> 0 limit: monotone in tf, so a term's (or a block's) max
+    tf bounds every weight it can contribute — the MaxScore / block-max
+    bound."""
+    return idf * max_tf * (K1 + 1.0) / (max_tf + K1 * (1.0 - B))
+
+
+class QuerySpec(NamedTuple):
+    """A normalised term query: distinct sorted terms, the matched-term
+    bar (conjunctive is the bar = |terms| case) and the distinct sorted
+    must_not terms."""
+
+    terms: list[str]
+    require_all: int
+    exclude: list[str]
+
+
+def query_spec(
+    terms: list[str],
+    conjunctive: bool = False,
+    min_should_match: int = 0,
+    exclude_terms: list[str] | None = None,
+) -> QuerySpec:
+    """The one query normaliser every top-k entry point builds through:
+    a repeated query term counts once (ES match semantics)."""
+    if conjunctive and min_should_match:
+        raise ValueError(
+            "conjunctive IS min_should_match=len(terms); pass only one"
+        )
+    uniq = sorted(set(terms))
+    return QuerySpec(
+        uniq,
+        len(uniq) if conjunctive else int(min_should_match or 0),
+        sorted(set(exclude_terms or [])),
+    )
 
 
 def bm25_topk(
@@ -139,7 +200,8 @@ def bm25_topk(
     # baseline.  Scores are bit-compatible: same per-term weight formula,
     # same round-then-order contract (sum order changes only the last ulp,
     # absorbed by SCORE_DECIMALS rounding exactly as before).
-    uniq = sorted(set(terms))
+    spec = query_spec(terms, conjunctive, min_should_match, exclude_terms)
+    uniq = spec.terms
     stats_src = corpus if global_stats else base
     doc_filters = (lang is not None) or (min_ts is not None) or (max_ts is not None)
     admit = F.lit(True)
@@ -162,7 +224,7 @@ def bm25_topk(
         proj.append(
             F.size(F.filter("_tk", lambda x: x == F.lit(t))).alias(f"tf_{i}")
         )
-    excl = sorted(set(exclude_terms)) if exclude_terms else []
+    excl = spec.exclude
     if excl:
         proj.append(
             F.arrays_overlap(
@@ -247,9 +309,8 @@ def bm25_topk(
         cand.withColumn("score", F.round(score_expr, SCORE_DECIMALS))
         .withColumn("n_matched", n_matched_expr)
     )
-    n_req = len(uniq) if conjunctive else int(min_should_match)
-    if n_req:
-        scored = scored.filter(F.col("n_matched") >= n_req)
+    if spec.require_all:
+        scored = scored.filter(F.col("n_matched") >= spec.require_all)
     scored = scored.select("doc_id", "url", "score")
     if k is None:
         return scored  # bm25_scores: the untruncated matching set

@@ -47,14 +47,19 @@ from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import DOC_LEN_SQL, TOKEN_SPLIT_RE
 from .bm25 import B, K1, SCORE_DECIMALS
 from .wand import (
+    _EMPTY,
     _collect_idfs,
     _decode_ids_only,
     _filters_df,
+    _live_mask,
     _n_parts,
     _postings_for_terms,
     _salt_scored,
     _score_salt_group,
+    _select,
     _split_filters,
+    _topk_frame,
+    _with_urls,
 )
 
 ORIGIN_TS = "2022-01-01 00:00:00"
@@ -66,16 +71,6 @@ def _terms_sql(terms: list[str]) -> str:
         # empty clause: IN () is a parse error in both engines
         return "''"
     return ", ".join("'" + t.replace("'", "''") + "'" for t in sorted(set(terms)))
-
-
-def _url_join(index: dict, top: DataFrame, k: int) -> DataFrame:
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(top), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
 
 
 def boosting_topk(
@@ -117,14 +112,14 @@ def boosting_topk(
         if dem_ids.size:
             hit = np.isin(scored["doc_id"].to_numpy(np.int64), dem_ids)
             raw = np.where(hit, raw * nb, raw)
-        rounded = np.round(raw, SCORE_DECIMALS)
-        ids = scored["doc_id"].to_numpy(np.int64)
-        order = np.lexsort((ids, -rounded))[: min(k, ids.size)]
-        return pd.DataFrame({"doc_id": ids[order], "score": rounded[order]})
+        return _topk_frame(
+            *_select(scored["doc_id"].to_numpy(np.int64), raw, k)
+        )
 
     local = _salt_scored(post, filt, False, kernel, "doc_id long, score double")
-    top = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return _url_join(index, top, k)
+    return _with_urls(
+        index, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    )
 
 
 def boosting_sql(
@@ -195,15 +190,9 @@ def constant_score_topk(
 
     def kernel(pdf: pd.DataFrame, tomb, allowed) -> pd.DataFrame:
         ids = _decode_ids_only(pdf)
-        if tomb is not None and tomb.size:
-            ids = ids[~np.isin(ids, tomb)]
-        if allowed is not None:
-            if allowed.size:
-                pos = np.searchsorted(allowed, ids)
-                pos[pos >= allowed.size] = 0
-                ids = ids[allowed[pos] == ids]
-            else:
-                ids = ids[:0]
+        live = _live_mask(ids, tomb, allowed)
+        if live is not None:
+            ids = ids[live]
         return pd.DataFrame({"doc_id": ids[: min(k, ids.size)]})
 
     local = _salt_scored(post, filt, doc_filter is not None, kernel, "doc_id long")
@@ -212,7 +201,7 @@ def constant_score_topk(
         .limit(k)
         .withColumn("score", F.lit(float(boost)))
     )
-    return _url_join(index, top, k).orderBy(F.asc("doc_id"))
+    return _with_urls(index, top, ordered=False).orderBy(F.asc("doc_id"))
 
 
 def constant_score_sql(
@@ -283,29 +272,25 @@ def distance_feature_topk(
             raw_scores=True,
         )
         if scored.empty:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
-            )
+            return _EMPTY.copy()
         m = scored.merge(dv, on="doc_id", how="left")
         dist = np.abs(m["epoch"].to_numpy(np.float64) - org)
-        final = np.round(
-            m["score"].to_numpy(np.float64) + bst * piv / (piv + dist),
-            SCORE_DECIMALS,
+        return _topk_frame(
+            *_select(
+                m["doc_id"].to_numpy(np.int64),
+                m["score"].to_numpy(np.float64) + bst * piv / (piv + dist),
+                k,
+            )
         )
-        ids = m["doc_id"].to_numpy(np.int64)
-        order = np.lexsort((ids, -final))[: min(k, ids.size)]
-        return pd.DataFrame({"doc_id": ids[order], "score": final[order]})
 
     local = (
         post.groupBy("salt")
         .cogroup(side.groupBy("salt"))
         .applyInPandas(kernel, "doc_id long, score double")
     )
-    top = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return _url_join(index, top, k)
+    return _with_urls(
+        index, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    )
 
 
 def distance_feature_sql(
@@ -423,28 +408,25 @@ def rank_feature_topk(
             raw_scores=True,
         )
         if scored.empty:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
-            )
+            return _EMPTY.copy()
         m = scored.merge(dv, on="doc_id", how="left")
         feat = _rank_feature_np(m["feat"].to_numpy(np.float64), func, piv, expo)
-        final = np.round(
-            m["score"].to_numpy(np.float64) + bst * feat, SCORE_DECIMALS
+        return _topk_frame(
+            *_select(
+                m["doc_id"].to_numpy(np.int64),
+                m["score"].to_numpy(np.float64) + bst * feat,
+                k,
+            )
         )
-        ids = m["doc_id"].to_numpy(np.int64)
-        order = np.lexsort((ids, -final))[: min(k, ids.size)]
-        return pd.DataFrame({"doc_id": ids[order], "score": final[order]})
 
     local = (
         post.groupBy("salt")
         .cogroup(side.groupBy("salt"))
         .applyInPandas(kernel, "doc_id long, score double")
     )
-    top = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return _url_join(index, top, k)
+    return _with_urls(
+        index, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    )
 
 
 def rank_feature_sql(

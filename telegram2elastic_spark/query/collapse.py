@@ -121,6 +121,7 @@ def _collapse_indexed(
         _postings_for_terms,
         _score_salt_group,
         _split_filters,
+        _with_urls,
     )
 
     spark = index["doc_map"].sparkSession
@@ -197,15 +198,7 @@ def _collapse_indexed(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
-    # url lookup on the k-row result only (broadcast — doc_map never
-    # shuffled per query)
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(best), "doc_id", "inner")
-        .select("host", "doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return _with_urls(index, best)
 
 
 def search_collapse_sql(
@@ -322,6 +315,7 @@ def _inner_hits_indexed(
         _postings_for_terms,
         _score_salt_group,
         _split_filters,
+        _with_urls,
     )
 
     spark = index["doc_map"].sparkSession
@@ -395,12 +389,7 @@ def _inner_hits_indexed(
         local.withColumn("hit_rank", F.row_number().over(w))
         .filter(F.col("hit_rank") <= inner_size)
     )
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(ranked), "doc_id", "inner")
-        .select("host", "doc_id", "url", "score", "hit_rank")
-    )
+    return _with_urls(index, ranked, ordered=False)
 
 
 def collapse_inner_hits_sql(

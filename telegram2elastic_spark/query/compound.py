@@ -47,16 +47,20 @@ from pyspark.sql import functions as F
 
 from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import TOKEN_SPLIT_RE
-from ..index.codec import decode_many
-from .bm25 import B, K1, SCORE_DECIMALS
-from .phrase import _phrase_counts_group
+from .bm25 import B, K1, SCORE_DECIMALS, bm25_weight, idf
+from .phrase import _phrase_counts_group, _pseudo_term_w
 from .wand import (
-    _bm25_w,
     _collect_idfs,
+    _decode,
     _filters_df,
+    _in_sorted,
+    _index_stats,
+    _live_mask,
     _postings_for_terms,
     _salt_scored,
     _score_salt_group,
+    _select,
+    _with_urls,
 )
 
 _EMPTY = pd.DataFrame(
@@ -94,25 +98,12 @@ def _term_sums_restricted(
         g = g.loc[hi > lo]
         if g.empty:
             continue
-        ids, tfs, dls = decode_many(
-            [bytes(x) for x in g["doc_gaps"]],
-            [bytes(x) for x in g["tf_bytes"]],
-            [bytes(x) for x in g["dl_bytes"]],
-            g["n_docs"].to_numpy(),
-        )
-        ids = ids.astype(np.int64)
+        ids, tfs, dls = _decode(g)
         m = np.isin(ids, doc_ids)
         if not m.any():
             continue
         ids_all.append(ids[m])
-        w_all.append(
-            _bm25_w(
-                tfs.astype(np.float64)[m],
-                dls.astype(np.float64)[m],
-                avgdl,
-                idf,
-            )
-        )
+        w_all.append(bm25_weight(tfs[m], dls[m], avgdl, idf))
     if not ids_all:
         return {}
     ids = np.concatenate(ids_all)
@@ -208,12 +199,12 @@ def _compound_group(
             }
         )
         if allowed is not None:
-            ids = prows["doc_id"].to_numpy(np.int64)
-            al = np.asarray(allowed, dtype=np.int64)
-            pos = np.searchsorted(al, ids)
-            pos[pos >= al.size] = 0
-            mask = (al[pos] == ids) if al.size else np.zeros(ids.shape, bool)
-            prows = prows.loc[mask]
+            prows = prows.loc[
+                _in_sorted(
+                    prows["doc_id"].to_numpy(np.int64),
+                    np.asarray(allowed, dtype=np.int64),
+                )
+            ]
         out = pd.concat([out, prows], ignore_index=True)
     out = out.assign(dfp_part=np.int64(0)).astype(
         {
@@ -259,19 +250,11 @@ def _term_contrib_cached(
     if g is None:
         tcache[t] = None
         return None
-    g = g.sort_values("block_id")
-    ids, tfs, dls = decode_many(
-        [bytes(x) for x in g["doc_gaps"]],
-        [bytes(x) for x in g["tf_bytes"]],
-        [bytes(x) for x in g["dl_bytes"]],
-        g["n_docs"].to_numpy(),
-    )
-    ids = ids.astype(np.int64)
-    if tomb is not None and tomb.size:
-        live = ~np.isin(ids, tomb)
+    ids, tfs, dls = _decode(g.sort_values("block_id"))
+    live = _live_mask(ids, tomb, None)
+    if live is not None:
         ids, tfs, dls = ids[live], tfs[live], dls[live]
-    w = _bm25_w(tfs.astype(np.float64), dls.astype(np.float64), avgdl, idf)
-    tcache[t] = (ids, w)
+    tcache[t] = (ids, bm25_weight(tfs, dls, avgdl, idf))
     return tcache[t]
 
 
@@ -343,13 +326,9 @@ def _compound_group_cached(
     # top-k' among non-phrase docs, k' = k + |phrase docs| (see
     # _compound_group's sufficiency argument)
     if uniq.size:
-        if p_ids.size:
-            m = ~np.isin(uniq, p_ids)
-            uniq, sums = uniq[m], sums[m]
-        rounded = np.round(sums, SCORE_DECIMALS)
-        top = min(k + int(p_ids.size), uniq.size)
-        sel = np.lexsort((uniq, -rounded))[:top]
-        uniq, sums = uniq[sel], sums[sel]
+        uniq, sums = _select(
+            uniq, sums, k + int(p_ids.size), tombstones=p_ids, raw_scores=True
+        )
     out = pd.DataFrame(
         {
             "doc_id": uniq,
@@ -425,7 +404,7 @@ def compound_topk(
         post, filt, doc_filter is not None, kernel,
         "doc_id long, tscore double, phrase_tf long, dl long, dfp_part long",
     )
-    n = index["stats"].select("n_docs").first()[0]
+    n = _index_stats(index)[0]
     # phrase pseudo-term idf from the global PRE-doc_filter phrase df
     # (per-salt sentinel counts summed); scored rows exclude the
     # sentinels.  Window sum over the bounded post-kernel rows — an agg +
@@ -437,17 +416,7 @@ def compound_topk(
         "df_p", F.sum("dfp_part").over(_W.partitionBy())
     ).filter(F.col("doc_id") >= 0)
     phrase_w = F.when(
-        F.col("phrase_tf") > 0,
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(n)) - F.col("df_p") + 0.5) / (F.col("df_p") + 0.5)
-        )
-        * F.col("phrase_tf")
-        * (K1 + 1.0)
-        / (
-            F.col("phrase_tf")
-            + K1 * (1.0 - B + B * F.col("dl") / float(avgdl))
-        ),
+        F.col("phrase_tf") > 0, _pseudo_term_w(n, avgdl)
     ).otherwise(F.lit(0.0))
     scored = (
         partial
@@ -456,13 +425,7 @@ def compound_topk(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(scored), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return _with_urls(index, scored)
 
 
 def compound_topk_batch(
@@ -542,17 +505,7 @@ def compound_topk_batch(
         "df_p", F.sum("dfp_part").over(_W2.partitionBy("query_id"))
     ).filter(F.col("doc_id") >= 0)
     phrase_w = F.when(
-        F.col("phrase_tf") > 0,
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(n)) - F.col("df_p") + 0.5) / (F.col("df_p") + 0.5)
-        )
-        * F.col("phrase_tf")
-        * (K1 + 1.0)
-        / (
-            F.col("phrase_tf")
-            + K1 * (1.0 - B + B * F.col("dl") / float(avgdl))
-        ),
+        F.col("phrase_tf") > 0, _pseudo_term_w(n, avgdl)
     ).otherwise(F.lit(0.0))
     scored = rows.withColumn(
         "score", F.round(F.col("tscore") + phrase_w, SCORE_DECIMALS)
@@ -567,13 +520,7 @@ def compound_topk_batch(
         .filter(F.col("rn") <= k)
         .select("query_id", "doc_id", "score")
     )
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(topk), "doc_id", "inner")
-        .select("query_id", "doc_id", "url", "score")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-    )
+    return _with_urls(index, topk)
 
 
 def compound_topk_batch_sql(
@@ -739,16 +686,11 @@ def compound_topk_local(
     rows = partial.loc[partial["doc_id"] >= 0]
     tf = rows["phrase_tf"].to_numpy(np.float64)
     dl = rows["dl"].to_numpy(np.float64)
-    idf_p = np.log(1.0 + (float(n) - df_p + 0.5) / (df_p + 0.5))
-    phrase_w = np.where(
-        tf > 0,
-        idf_p * tf * (K1 + 1.0)
-        / np.where(tf > 0, tf + K1 * (1.0 - B + B * dl / float(avgdl)), 1.0),
-        0.0,
+    # tf = 0 rows (term-only docs) get weight 0 exactly: 0 * ... / (K1 * norm)
+    phrase_w = bm25_weight(tf, dl, float(avgdl), idf(n, df_p))
+    ids, scores = _select(
+        rows["doc_id"].to_numpy(np.int64),
+        rows["tscore"].to_numpy(np.float64) + phrase_w,
+        k,
     )
-    score = np.round(
-        rows["tscore"].to_numpy(np.float64) + phrase_w, SCORE_DECIMALS
-    )
-    ids = rows["doc_id"].to_numpy(np.int64)
-    sel = np.lexsort((ids, -score))[: min(k, ids.size)]
-    return [(int(ids[i]), float(score[i])) for i in sel]
+    return list(zip(ids.tolist(), scores.tolist()))

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import DOC_LEN_SQL, TOKEN_SPLIT_RE, tokens
-from .bm25 import B, K1, SCORE_DECIMALS
+from .bm25 import B, K1, SCORE_DECIMALS, bm25_weight, idf, idf_col
 
 
 def federated_topk(
@@ -128,15 +128,11 @@ def _federated_score(uniq, matched):
     for i in range(len(uniq)):
         w = F.when(
             matched[i],
-            F.log(
-                1.0
-                + (F.col("n") - F.col(f"df_{i}") + 0.5)
-                / (F.col(f"df_{i}") + 0.5)
-            )
-            * F.col(f"tf_{i}") * (K1 + 1.0)
-            / (
-                F.col(f"tf_{i}")
-                + K1 * (1.0 - B + B * F.col("dl") / F.col("avgdl"))
+            bm25_weight(
+                F.col(f"tf_{i}"),
+                F.col("dl"),
+                F.col("avgdl"),
+                idf_col(F.col("n"), F.col(f"df_{i}")),
             ),
         ).otherwise(F.lit(0.0))
         score = w if i == 0 else score + w
@@ -269,36 +265,21 @@ def federated_dfs_stats(
     driver-side — |indexes| tiny stat reads plus bucket-pruned term_dict
     lookups, no corpus-sized work — and return (idfs, avgdl) in the
     wand_topk stats_override shape."""
-    import numpy as np
+    from .wand import _index_stats, _term_dfs
 
     want = sorted(set(terms))
     total_n, total_len = 0, 0.0
     dfs: dict[str, int] = {}
     for name in sorted(indexes):
         idx = indexes[name]
-        n, avgdl = idx["stats"].select("n_docs", "avgdl").first()
-        n = int(n or 0)
+        n, avgdl = _index_stats(idx)
         total_n += n
-        total_len += n * (float(avgdl) if avgdl else 0.0)
-        for r in (
-            _bucketed_term_dict(idx, want)
-            .filter(F.col("term").isin(want))
-            .select("term", "df")
-            .collect()
-        ):
-            dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+        total_len += n * avgdl
+        for t, df in _term_dfs(idx, want).items():
+            dfs[t] = dfs.get(t, 0) + df
     avgdl = (total_len / total_n) if total_n else 1.0
-    idfs = {
-        t: float(np.log(1.0 + (total_n - df + 0.5) / (df + 0.5)))
-        for t, df in dfs.items()
-    }
+    idfs = {t: float(idf(total_n, df)) for t, df in dfs.items()}
     return idfs, avgdl
-
-
-def _bucketed_term_dict(idx: dict, terms: list[str]) -> DataFrame:
-    from .wand import _bucketed
-
-    return _bucketed(idx, idx["term_dict"], terms)
 
 
 def federated_topk_dfs_indexed(

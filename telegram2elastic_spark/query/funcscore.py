@@ -103,33 +103,12 @@ def function_score_topk(
     )
 
 
-def _funcscore_indexed(
-    index: dict,
-    terms: list[str],
-    k: int,
-    scale_sec: int,
-    offset_sec: int,
-    decay: float,
-    fvf_factor: float | None,
-) -> DataFrame:
-    from .wand import (
-        _collect_idfs,
-        _filters_df,
-        _n_parts,
-        _postings_for_terms,
-        _score_salt_group,
-        _split_filters,
-    )
+def _doc_values_side(index: dict) -> DataFrame:
+    """Doc-values side of a rescoring kernel: (doc_id, epoch, doc_len)
+    rows (kind 'h'), salt-aligned with the postings; tombstones ride
+    along as kind 't' rows (cogroup is 2-ary)."""
+    from .wand import _filters_df, _n_parts
 
-    spark = index["doc_map"].sparkSession
-    idfs, avgdl = _collect_idfs(index, terms)
-    empty = spark.createDataFrame([], "doc_id long, url string, score double")
-    if not idfs:
-        return empty
-
-    post = _postings_for_terms(index, sorted(idfs))
-    # doc-values side: (doc_id, epoch, doc_len), salt-aligned with the
-    # postings; tombstones ride along as kind='t' rows (cogroup is 2-ary)
     filt = _filters_df(index, None)
     side = index["doc_map"].select(
         "doc_id",
@@ -146,9 +125,39 @@ def _funcscore_indexed(
                 "kind",
             )
         )
-    side = side.withColumn(
+    return side.withColumn(
         "salt", F.pmod(F.col("doc_id"), F.lit(_n_parts(index))).cast("int")
     )
+
+
+def _funcscore_indexed(
+    index: dict,
+    terms: list[str],
+    k: int,
+    scale_sec: int,
+    offset_sec: int,
+    decay: float,
+    fvf_factor: float | None,
+) -> DataFrame:
+    from .wand import (
+        _EMPTY,
+        _collect_idfs,
+        _postings_for_terms,
+        _score_salt_group,
+        _select,
+        _split_filters,
+        _topk_frame,
+        _with_urls,
+    )
+
+    spark = index["doc_map"].sparkSession
+    idfs, avgdl = _collect_idfs(index, terms)
+    empty = spark.createDataFrame([], "doc_id long, url string, score double")
+    if not idfs:
+        return empty
+
+    post = _postings_for_terms(index, sorted(idfs))
+    side = _doc_values_side(index)
 
     def kernel(post_pdf: pd.DataFrame, side_pdf: pd.DataFrame) -> pd.DataFrame:
         dv = side_pdf.loc[side_pdf["kind"] == "h", ["doc_id", "epoch", "doc_len"]]
@@ -157,12 +166,7 @@ def _funcscore_indexed(
             post_pdf, idfs, float(avgdl), 1 << 60, tombstones=tomb
         )
         if scored.empty:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
-            )
+            return _EMPTY.copy()
         m = scored.merge(dv, on="doc_id", how="left")
         mult = _gauss_np(
             m["epoch"].to_numpy(np.float64), scale_sec, offset_sec, decay
@@ -171,11 +175,10 @@ def _funcscore_indexed(
             mult = mult * (
                 float(fvf_factor) * np.log1p(m["doc_len"].to_numpy(np.float64))
             )
-        final = np.round(m["score"].to_numpy() * mult, SCORE_DECIMALS)
-        order = np.lexsort((m["doc_id"].to_numpy(), -final))
-        keep = order[:k]
-        return pd.DataFrame(
-            {"doc_id": m["doc_id"].to_numpy()[keep], "score": final[keep]}
+        return _topk_frame(
+            *_select(
+                m["doc_id"].to_numpy(np.int64), m["score"].to_numpy() * mult, k
+            )
         )
 
     local = (
@@ -183,14 +186,8 @@ def _funcscore_indexed(
         .cogroup(side.groupBy("salt"))
         .applyInPandas(kernel, "doc_id long, score double")
     )
-    top = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    # url lookup on the k-row result only (broadcast)
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(top), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    return _with_urls(
+        index, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     )
 
 
@@ -296,10 +293,12 @@ def _random_indexed(index: dict, terms: list[str], seed: int, k: int) -> DataFra
     from .wand import (
         _collect_idfs,
         _filters_df,
-        _n_parts,
         _postings_for_terms,
+        _salt_scored,
         _score_salt_group,
-        _split_filters,
+        _select,
+        _topk_frame,
+        _with_urls,
     )
 
     spark = index["doc_map"].sparkSession
@@ -307,52 +306,22 @@ def _random_indexed(index: dict, terms: list[str], seed: int, k: int) -> DataFra
     empty = spark.createDataFrame([], "doc_id long, url string, score double")
     if not idfs:
         return empty
-    post = _postings_for_terms(index, sorted(idfs))
-    filt = _filters_df(index, None)
 
-    def score_salt(post_pdf: pd.DataFrame, filt_pdf: pd.DataFrame | None) -> pd.DataFrame:
-        tomb = None
-        if filt_pdf is not None and len(filt_pdf):
-            tomb, _ = _split_filters(filt_pdf, has_allow=False)
+    def kernel(post_pdf: pd.DataFrame, tomb, _allowed) -> pd.DataFrame:
         scored = _score_salt_group(
             post_pdf, idfs, float(avgdl), 1 << 60, tombstones=tomb
         )
-        if scored.empty:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
-            )
         ids = scored["doc_id"].to_numpy(np.int64)
-        final = np.round(
-            scored["score"].to_numpy() * _rnd_np(ids, seed), SCORE_DECIMALS
+        return _topk_frame(
+            *_select(ids, scored["score"].to_numpy() * _rnd_np(ids, seed), k)
         )
-        order = np.lexsort((ids, -final))[:k]
-        return pd.DataFrame({"doc_id": ids[order], "score": final[order]})
 
-    if filt is not None:
-        filt = filt.withColumn(
-            "salt", F.pmod(F.col("doc_id"), F.lit(_n_parts(index))).cast("int")
-        )
-        local = (
-            post.groupBy("salt")
-            .cogroup(filt.groupBy("salt"))
-            .applyInPandas(
-                lambda p, t: score_salt(p, t), "doc_id long, score double"
-            )
-        )
-    else:
-        local = post.groupBy("salt").applyInPandas(
-            lambda p: score_salt(p, None), "doc_id long, score double"
-        )
-    top = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(top), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    local = _salt_scored(
+        _postings_for_terms(index, sorted(idfs)), _filters_df(index, None),
+        False, kernel, "doc_id long, score double",
+    )
+    return _with_urls(
+        index, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     )
 
 

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame
 
 from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import TOKEN_SPLIT_RE
-from .bm25 import ROUND_GUARD, SCORE_DECIMALS
+from .bm25 import TIE_BAND, idf
 from .phrase import (
     _DOC_KEY,
     _EMPTY_COUNTS,
@@ -226,8 +226,7 @@ def intervals_any_of_topk(
         return (n + 0.5 - 0.5 * r) / (r + 1.0)
 
     df_ub = min(n, sum(min(df_of(t) for t in src) for src in live_sources))
-    idf_lb = float(np.log1p((n - df_ub + 0.5) / (df_ub + 0.5)))
-    band = (2.0 * 10.0 ** (-SCORE_DECIMALS) + ROUND_GUARD) / idf_lb
+    band = TIE_BAND / float(idf(n, df_ub))
     scan_terms = sorted({t for src in live_sources for t in src})
     return _run_span(
         index, scan_terms, k,
@@ -308,9 +307,8 @@ def intervals_ordered_topk_local(
 
     Returns [(doc_id, score), ...] rank-identical to
     intervals_ordered_topk."""
-    from .bm25 import SCORE_DECIMALS
     from .phrase import _local_pos_blocks, _phrase_weights
-    from .wand import _tomb_array
+    from .wand import _index_stats, _select, _tomb_array
 
     if not terms:
         return []
@@ -328,13 +326,10 @@ def intervals_ordered_topk_local(
     _trim_pos_decoded(index)
     if counts.empty:
         return []
-    if "_stats" not in index:
-        n, avgdl = index["stats"].select("n_docs", "avgdl").first()
-        index["_stats"] = (int(n or 0), float(avgdl) if avgdl else 1.0)
-    n, avgdl = index["_stats"]
-    w = np.round(
-        _phrase_weights(counts, n, avgdl, df_p=len(counts)), SCORE_DECIMALS
+    n, avgdl = _index_stats(index)
+    ids, scores = _select(
+        counts["doc_id"].to_numpy(np.int64),
+        _phrase_weights(counts, n, avgdl, df_p=len(counts)),
+        k,
     )
-    ids = counts["doc_id"].to_numpy(np.int64)
-    sel = np.lexsort((ids, -w))[: min(k, ids.size)]
-    return [(int(ids[i]), float(w[i])) for i in sel]
+    return list(zip(ids.tolist(), scores.tolist()))

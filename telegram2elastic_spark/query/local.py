@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import py_tokenize
-from .bm25 import SCORE_DECIMALS
+from .bm25 import SCORE_DECIMALS, bm25_weight
 
 #: cap on resident stored-field rows in a handle's "_doc_cache" (ADVICE
 #: r5, low: unbounded growth on a long-lived serving handle).  ~1 KB/doc
@@ -46,7 +46,7 @@ from .bm25 import SCORE_DECIMALS
 #: an evicted doc is one point read away.
 DOC_CACHE_MAX_ENTRIES = 100_000
 from .expand import DEFAULT_MAX_EXPANSIONS, wildcard_regex
-from .mlt import MAX_QUERY_TERMS
+from .mlt import MAX_QUERY_TERMS, _interesting_terms
 from .suggest import _py_trigrams
 from .wand import wand_topk_local
 
@@ -199,7 +199,7 @@ def multi_match_topk_local(
     from .multifield import _SEP
     from .wand import (
         _collect_idfs,
-        _postings_for_terms,
+        _local_blocks,
         _score_salt_group,
         _tomb_array,
     )
@@ -208,26 +208,14 @@ def multi_match_topk_local(
     key_weights: dict[str, float] = {}
     key_avgdls: dict[str, float] = {}
     parts = []
-    cols = [
-        "term", "block_id", "n_docs", "first_doc_id", "last_doc_id",
-        "doc_gaps", "tf_bytes", "dl_bytes", "block_max_tf",
-    ]
     first = None
     for name, idx in field_indexes.items():
         if first is None:
             first = idx
         idfs, avgdl = _collect_idfs(idx, terms)
         w = float(weights.get(name, 1.0))
-        cache = idx.setdefault("_local_post_cache", {})
-        missing = [t for t in idfs if t not in cache]
-        if missing:
-            fetched = (
-                _postings_for_terms(idx, missing).select(*cols).toPandas()
-            )
-            for t, g in fetched.groupby("term", sort=False):
-                cache[t] = g
-            for t in missing:
-                cache.setdefault(t, None)
+        _local_blocks(idx, list(idfs), [])
+        cache = idx["_local_post_cache"]
         for t, idf in idfs.items():
             key = name + _SEP + t
             key_idfs[key] = idf
@@ -332,22 +320,15 @@ def more_like_this_local(
     if not cand:
         return []
     terms, dfs, _ = _vocab(index)
-    if "_stats" not in index:
-        n, avgdl = index["stats"].select("n_docs", "avgdl").first()
-        index["_stats"] = (int(n or 0), float(avgdl) if avgdl else 1.0)
-    n = index["_stats"][0]
     pos = np.searchsorted(terms, np.array(cand, dtype=object))
-    scored = []
-    for t, p in zip(cand, pos):
-        if p >= terms.size or terms[p] != t:
-            continue
-        df = int(dfs[p])
-        if df < min_doc_freq:
-            continue
-        idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        scored.append((round(tf[t] * idf, 6), t))
-    scored.sort(key=lambda x: (-x[0], x[1]))
-    sel = [t for _, t in scored[:max_query_terms]]
+    found = {
+        t: int(dfs[p])
+        for t, p in zip(cand, pos)
+        if p < terms.size and terms[p] == t
+    }
+    sel = _interesting_terms(
+        index, tf, cand, max_query_terms, min_doc_freq, dfs=found
+    )
     if not sel:
         return []
     hits = wand_topk_local(index, sel, k=k + 1)
@@ -605,9 +586,15 @@ def rank_feature_topk_local(
     Full accumulation over the hot-shard posting cache; the doc_len
     feature is decoded FROM the postings themselves (dl rides in every
     block), so no doc-values fetch is needed at all."""
-    from ..index.codec import decode_many
     from .boosting import RANK_FEATURE_FUNCS, _rank_feature_np
-    from .wand import _bm25_w, _collect_idfs, _local_blocks, _tomb_array
+    from .wand import (
+        _collect_idfs,
+        _decode,
+        _live_mask,
+        _local_blocks,
+        _select,
+        _tomb_array,
+    )
 
     if func not in RANK_FEATURE_FUNCS:
         raise ValueError(f"rank_feature func must be one of {RANK_FEATURE_FUNCS}")
@@ -620,24 +607,13 @@ def rank_feature_topk_local(
     tomb = _tomb_array(index)
     all_ids, all_w, all_dl = [], [], []
     for t, g in pdf.groupby("term", sort=False):
-        g = g.sort_values("block_id")
-        ids, tfs, dls = decode_many(
-            [bytes(x) for x in g["doc_gaps"]],
-            [bytes(x) for x in g["tf_bytes"]],
-            [bytes(x) for x in g["dl_bytes"]],
-            g["n_docs"].to_numpy(),
-        )
-        ids = ids.astype(np.int64)
-        if tomb.size:
-            live = ~np.isin(ids, tomb)
+        ids, tfs, dls = _decode(g.sort_values("block_id"))
+        live = _live_mask(ids, tomb, None)
+        if live is not None:
             ids, tfs, dls = ids[live], tfs[live], dls[live]
         all_ids.append(ids)
-        all_w.append(
-            _bm25_w(
-                tfs.astype(np.float64), dls.astype(np.float64), avgdl, idfs[t]
-            )
-        )
-        all_dl.append(dls.astype(np.float64))
+        all_w.append(bm25_weight(tfs, dls, avgdl, idfs[t]))
+        all_dl.append(dls)
     ids = np.concatenate(all_ids)
     if ids.size == 0:
         return []
@@ -648,9 +624,8 @@ def rank_feature_topk_local(
     uniq, starts = np.unique(ids, return_index=True)
     sums = np.add.reduceat(w, starts)
     feat = _rank_feature_np(dl[starts], func, float(pivot), float(exponent))
-    final = np.round(sums + float(boost) * feat, SCORE_DECIMALS)
-    sel = np.lexsort((uniq, -final))[: min(int(k), uniq.size)]
-    return [(int(d), float(s)) for d, s in zip(uniq[sel], final[sel])]
+    ids, scores = _select(uniq, sums + float(boost) * feat, int(k))
+    return list(zip(ids.tolist(), scores.tolist()))
 
 
 def phrase_suggest_local(
@@ -799,19 +774,15 @@ def synonym_match_topk_local(
     """[(doc_id, score)] — rank-identical to synonyms.synonym_match_topk,
     served from the hot-shard postings cache (SynonymQuery blending:
     group tf summed before saturation, idf from the max-df member)."""
-    from .synonyms import _decode_group
-    from .wand import _collect_idfs, _local_blocks, _tomb_array
+    from .synonyms import _group_idfs, _group_scores
+    from .wand import _collect_idfs, _local_blocks, _select, _tomb_array
 
     norm_groups = [sorted({t.lower() for t in g}) for g in groups if g]
     members = sorted({t for g in norm_groups for t in g})
     if not members:
         return []
     idfs, avgdl = _collect_idfs(index, members)
-    group_idfs = []
-    for g in norm_groups:
-        live = [t for t in g if t in idfs]
-        if live:
-            group_idfs.append((live, min(idfs[t] for t in live)))
+    group_idfs = _group_idfs(idfs, norm_groups)
     if not group_idfs:
         return []
     pdf = _local_blocks(index, members, [t for t in members if t in idfs])
@@ -820,35 +791,11 @@ def synonym_match_topk_local(
     by_term = {
         t: g.sort_values("block_id") for t, g in pdf.groupby("term", sort=False)
     }
-    from .bm25 import B, K1
-
-    all_ids, all_contrib = [], []
-    for g_members, idf_g in group_idfs:
-        ids, tf, dl = _decode_group(by_term, g_members)
-        if not ids.size:
-            continue
-        tff = tf.astype(np.float64)
-        sat = (
-            tff * (K1 + 1.0)
-            / (tff + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
-        )
-        all_ids.append(ids)
-        all_contrib.append(idf_g * sat)
-    if not all_ids:
-        return []
-    ids = np.concatenate(all_ids)
-    contrib = np.concatenate(all_contrib)
-    order = np.argsort(ids, kind="stable")
-    ids, contrib = ids[order], contrib[order]
-    uniq, starts = np.unique(ids, return_index=True)
-    score = np.add.reduceat(contrib, starts)
-    tomb = _tomb_array(index)
-    if tomb.size:
-        live = ~np.isin(uniq, tomb)
-        uniq, score = uniq[live], score[live]
-    score = np.round(score, SCORE_DECIMALS)
-    order = np.lexsort((uniq, -score))[: int(k)]
-    return [(int(uniq[i]), float(score[i])) for i in order]
+    ids, scores = _select(
+        *_group_scores(by_term, group_idfs, avgdl), int(k),
+        tombstones=_tomb_array(index),
+    )
+    return list(zip(ids.tolist(), scores.tolist()))
 
 
 def highlight_fvh_local(

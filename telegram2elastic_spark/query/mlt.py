@@ -33,11 +33,36 @@ from pyspark.sql import functions as F
 
 from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import DOC_LEN_SQL, TOKEN_SPLIT_RE, py_tokenize
-from .bm25 import B, K1, SCORE_DECIMALS
+from .bm25 import SCORE_DECIMALS, idf
 from .expand import _expanded_bm25_sql
-from .wand import _bucketed, wand_topk
+from .wand import wand_topk
 
 MAX_QUERY_TERMS = 25  # ES MoreLikeThisQuery default
+
+
+def _interesting_terms(
+    index: dict,
+    tf: Counter,
+    cand: list[str],
+    max_query_terms: int,
+    min_doc_freq: int,
+    dfs: dict[str, int] | None = None,
+) -> list[str]:
+    """ES MLT term selection: `cand` terms with df >= min_doc_freq by
+    round(tf * idf, 6) desc, term asc.  `dfs` defaults to the term_dict
+    lookup of the idf cache."""
+    from .wand import _index_stats, _term_dfs
+
+    if dfs is None:
+        dfs = _term_dfs(index, cand)
+    n = _index_stats(index)[0]
+    scored = [
+        (round(tf[t] * float(idf(n, dfs[t])), 6), t)
+        for t in cand
+        if dfs.get(t) is not None and dfs[t] >= min_doc_freq
+    ]
+    scored.sort(key=lambda x: (-x[0], x[1]))
+    return [t for _, t in scored[:max_query_terms]]
 
 
 def select_mlt_terms(
@@ -56,26 +81,7 @@ def select_mlt_terms(
     cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
     if not cand:
         return []
-    if "_stats" not in index:
-        n, avgdl = index["stats"].select("n_docs", "avgdl").first()
-        index["_stats"] = (int(n or 0), float(avgdl) if avgdl else 1.0)
-    n = index["_stats"][0]
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in _bucketed(index, index["term_dict"], cand)
-        .filter(F.col("term").isin(cand))
-        .select("term", "df")
-        .collect()
-    }
-    scored = []
-    for t in cand:
-        df = dfs.get(t)
-        if df is None or df < min_doc_freq:
-            continue
-        idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        scored.append((round(tf[t] * idf, 6), t))
-    scored.sort(key=lambda x: (-x[0], x[1]))
-    return [t for _, t in scored[:max_query_terms]]
+    return _interesting_terms(index, tf, cand, max_query_terms, min_doc_freq)
 
 
 def more_like_this(
@@ -308,26 +314,7 @@ def select_mlt_terms_multi(
     )
     if not cand:
         return []
-    if "_stats" not in index:
-        n, avgdl = index["stats"].select("n_docs", "avgdl").first()
-        index["_stats"] = (int(n or 0), float(avgdl) if avgdl else 1.0)
-    n = index["_stats"][0]
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in _bucketed(index, index["term_dict"], cand)
-        .filter(F.col("term").isin(cand))
-        .select("term", "df")
-        .collect()
-    }
-    scored = []
-    for t in cand:
-        df = dfs.get(t)
-        if df is None or df < min_doc_freq:
-            continue
-        idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        scored.append((round(tf[t] * idf, 6), t))
-    scored.sort(key=lambda x: (-x[0], x[1]))
-    return [t for _, t in scored[:max_query_terms]]
+    return _interesting_terms(index, tf, cand, max_query_terms, min_doc_freq)
 
 
 def more_like_this_multi(

@@ -33,8 +33,18 @@ from pyspark.sql import functions as F
 from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import TOKEN_SPLIT_RE
 from ..index.build import build_index
-from .bm25 import B, K1, SCORE_DECIMALS
-from .wand import _collect_idfs, _postings_for_terms, _score_salt_group
+from .bm25 import B, K1, SCORE_DECIMALS, bm25_weight, idf
+from .wand import (
+    _collect_idfs,
+    _decode,
+    _index_stats,
+    _postings_for_terms,
+    _score_salt_group,
+    _select,
+    _term_dfs,
+    _topk_frame,
+    _with_urls,
+)
 
 # field/term separator inside composite kernel keys; tokenizer terms are
 # letter/number runs so \x1f can never occur in a term (field names must
@@ -200,13 +210,8 @@ def multi_match_topk(
         ),
         "doc_id long, score double",
     )
-    topk = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return (
-        first["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(topk), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    return _with_urls(
+        first, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     )
 
 
@@ -382,22 +387,6 @@ LIMIT {k}
 """
 
 
-def _collect_dfs(index: dict, terms: list[str]) -> dict[str, int]:
-    """Raw per-term document frequencies from the term dictionary
-    (bucket-pruned scan, |q| rows)."""
-    from .wand import _bucketed
-
-    out: dict[str, int] = {}
-    for r in (
-        _bucketed(index, index["term_dict"], terms)
-        .filter(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    ):
-        out[r["term"]] = int(r["df"])
-    return out
-
-
 def combined_fields_topk(
     field_indexes: dict[str, dict],
     weights: dict[str, float],
@@ -431,8 +420,6 @@ def combined_fields_topk(
     import numpy as np
     import pandas as pd
 
-    from ..index.codec import decode_many
-    from .bm25 import SCORE_DECIMALS
     from .wand import _n_parts
 
     first = next(iter(field_indexes.values()))
@@ -447,24 +434,19 @@ def combined_fields_topk(
     field_w: dict[str, float] = {}
     per_field_dfs: dict[str, dict[str, int]] = {}
     for name, idx in field_indexes.items():
-        from .wand import _collect_idfs
-
-        _collect_idfs(idx, [])  # prime idx["_stats"]
-        n_f, avgdl_f = idx["_stats"]
+        n_f, avgdl_f = _index_stats(idx)
         n_docs = n_f if n_docs is None else n_docs
         w = float(weights.get(name, 1.0))
         field_w[name] = w
         avgdl_c += w * avgdl_f
-        per_field_dfs[name] = _collect_dfs(idx, tset)
+        per_field_dfs[name] = _term_dfs(idx, tset)
         for t, df in per_field_dfs[name].items():
             df_sum[t] = df_sum.get(t, 0) + df
     live = sorted(t for t in tset if df_sum.get(t))
     if not live or not n_docs:
         return empty
     idfs_c = {
-        t: float(np.log(1.0 + (n_docs - min(n_docs, d) + 0.5)
-                        / (min(n_docs, d) + 0.5)))
-        for t, d in df_sum.items() if d
+        t: float(idf(n_docs, min(n_docs, d))) for t, d in df_sum.items() if d
     }
 
     cols = [
@@ -501,18 +483,9 @@ def combined_fields_topk(
         F.pmod(F.col("doc_id"), F.lit(_n_parts(first))).cast("int").alias("salt"),
     )
 
-    K1_, B_ = K1, B
     avgdl_const = float(avgdl_c)
 
     def kernel(post_pdf: pd.DataFrame, side_pdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame(
-            {
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
-        if post_pdf.empty:
-            return out_empty
         sv_ids = side_pdf["doc_id"].to_numpy(np.int64)
         sv_dl = side_pdf["dlc"].to_numpy(np.float64)
         order = np.argsort(sv_ids)
@@ -527,49 +500,30 @@ def combined_fields_topk(
             t_ids = np.array([], dtype=np.int64)
             t_tfc = np.array([], dtype=np.float64)
             for fname, fg in g.groupby(fld.loc[g.index], sort=False):
-                fg = fg.sort_values("block_id")
-                ids, tfs, _dls = decode_many(
-                    [bytes(x) for x in fg["doc_gaps"]],
-                    [bytes(x) for x in fg["tf_bytes"]],
-                    [bytes(x) for x in fg["dl_bytes"]],
-                    fg["n_docs"].to_numpy(),
-                )
-                w = field_w[fname]
-                t_ids = np.concatenate([t_ids, ids.astype(np.int64)])
-                t_tfc = np.concatenate([t_tfc, w * tfs.astype(np.float64)])
+                ids, tfs, _dls = _decode(fg.sort_values("block_id"))
+                t_ids = np.concatenate([t_ids, ids])
+                t_tfc = np.concatenate([t_tfc, field_w[fname] * tfs])
             o = np.argsort(t_ids, kind="stable")
             t_ids, t_tfc = t_ids[o], t_tfc[o]
             uniq, starts = np.unique(t_ids, return_index=True)
             tfc = np.add.reduceat(t_tfc, starts)
             pos = np.searchsorted(sv_ids, uniq)
             pos[pos >= sv_ids.size] = 0
-            dlc = sv_dl[pos]
-            wgt = idfs_c[t] * tfc * (K1_ + 1.0) / (
-                tfc + K1_ * (1.0 - B_ + B_ * dlc / avgdl_const)
-            )
+            wgt = bm25_weight(tfc, sv_dl[pos], avgdl_const, idfs_c[t])
             all_ids = np.concatenate([acc_ids, uniq])
             all_sc = np.concatenate([acc_sc, wgt])
             o2 = np.argsort(all_ids, kind="stable")
             u2, s2 = np.unique(all_ids[o2], return_index=True)
             acc_ids, acc_sc = u2, np.add.reduceat(all_sc[o2], s2)
-        if acc_ids.size == 0:
-            return out_empty
-        rounded = np.round(acc_sc, SCORE_DECIMALS)
-        sel = np.lexsort((acc_ids, -rounded))[: min(k, acc_ids.size)]
-        return pd.DataFrame({"doc_id": acc_ids[sel], "score": rounded[sel]})
+        return _topk_frame(*_select(acc_ids, acc_sc, k))
 
     local = (
         post.groupBy("salt")
         .cogroup(side.groupBy("salt"))
         .applyInPandas(kernel, "doc_id long, score double")
     )
-    topk = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return (
-        first["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(topk), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    return _with_urls(
+        first, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     )
 
 
@@ -683,10 +637,6 @@ def cross_fields_topk(
     import numpy as np
     import pandas as pd
 
-    from ..index.codec import decode_many
-    from .bm25 import SCORE_DECIMALS
-    from .wand import _bm25_w, _collect_idfs
-
     weights = weights or {}
     first = next(iter(field_indexes.values()))
     spark = first["doc_map"].sparkSession
@@ -699,21 +649,17 @@ def cross_fields_topk(
     field_w: dict[str, float] = {}
     field_avgdl: dict[str, float] = {}
     for name, idx in field_indexes.items():
-        _collect_idfs(idx, [])  # prime idx["_stats"]
-        n_f, avgdl_f = idx["_stats"]
+        n_f, avgdl_f = _index_stats(idx)
         n_docs = n_f if n_docs is None else n_docs
         field_w[name] = float(weights.get(name, 1.0))
         field_avgdl[name] = float(avgdl_f)
-        per_field_dfs[name] = _collect_dfs(idx, tset)
+        per_field_dfs[name] = _term_dfs(idx, tset)
         for t, df in per_field_dfs[name].items():
             df_blend[t] = max(df_blend.get(t, 0), df)
     live = sorted(t for t in tset if df_blend.get(t))
     if not live or not n_docs:
         return empty
-    idfs_b = {
-        t: float(np.log(1.0 + (n_docs - d + 0.5) / (d + 0.5)))
-        for t, d in df_blend.items() if d
-    }
+    idfs_b = {t: float(idf(n_docs, d)) for t, d in df_blend.items() if d}
 
     cols = [
         "salt", "term", "block_id", "n_docs", "first_doc_id", "last_doc_id",
@@ -736,32 +682,15 @@ def cross_fields_topk(
     tb = float(tie_breaker)
 
     def kernel(post_pdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame(
-            {
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
-        if post_pdf.empty:
-            return out_empty
         # per BARE term: decode each field's postings, dis-max per doc
         per_term: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {}
         for key, g in post_pdf.groupby("term", sort=False):
             fname, t = key.split(_SEP, 1)
-            g = g.sort_values("block_id")
-            ids, tfs, dls = decode_many(
-                [bytes(x) for x in g["doc_gaps"]],
-                [bytes(x) for x in g["tf_bytes"]],
-                [bytes(x) for x in g["dl_bytes"]],
-                g["n_docs"].to_numpy(),
+            ids, tfs, dls = _decode(g.sort_values("block_id"))
+            w = field_w[fname] * bm25_weight(
+                tfs, dls, field_avgdl[fname], idfs_b[t]
             )
-            w = field_w[fname] * _bm25_w(
-                tfs.astype(np.float64),
-                dls.astype(np.float64),
-                field_avgdl[fname],
-                idfs_b[t],
-            )
-            per_term.setdefault(t, []).append((ids.astype(np.int64), w))
+            per_term.setdefault(t, []).append((ids, w))
         all_ids: list[np.ndarray] = []
         all_sc: list[np.ndarray] = []
         # deterministic term order so the float sum over terms is stable
@@ -781,21 +710,13 @@ def cross_fields_topk(
         o = np.argsort(ids, kind="stable")
         ids, sc = ids[o], sc[o]
         uniq, starts = np.unique(ids, return_index=True)
-        tot = np.add.reduceat(sc, starts)
-        rounded = np.round(tot, SCORE_DECIMALS)
-        sel = np.lexsort((uniq, -rounded))[: min(k, uniq.size)]
-        return pd.DataFrame({"doc_id": uniq[sel], "score": rounded[sel]})
+        return _topk_frame(*_select(uniq, np.add.reduceat(sc, starts), k))
 
     local = post.groupBy("salt").applyInPandas(
         kernel, "doc_id long, score double"
     )
-    topk = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return (
-        first["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(topk), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    return _with_urls(
+        first, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     )
 
 

@@ -28,8 +28,25 @@ from pyspark.sql import functions as F
 from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import TOKEN_SPLIT_RE
 from ..index.codec import decode_many, decode_positions
-from .bm25 import B, K1, ROUND_GUARD, SCORE_DECIMALS
-from .wand import _filters_df, _postings_for_terms, _salt_scored
+from .bm25 import (
+    B,
+    K1,
+    SCORE_DECIMALS,
+    TIE_BAND,
+    bm25_weight,
+    idf,
+    idf_col,
+    tf_saturation,
+)
+from .wand import (
+    _filters_df,
+    _in_sorted,
+    _index_stats,
+    _postings_for_terms,
+    _salt_scored,
+    _select,
+    _with_urls,
+)
 
 # Per-candidate key space: key = candidate_index * _DOC_KEY + position.
 # Positions are token offsets (< doc length << 2^33) and candidate counts
@@ -295,8 +312,45 @@ def _phrase_g(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     query the phrase idf is a global positive constant, so ordering by g
     IS ordering by score — salt-local truncation can run before df_p is
     known."""
-    tf = tf.astype(np.float64)
-    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
+    return tf_saturation(tf.astype(np.float64), dl.astype(np.float64), avgdl)
+
+
+def _bounded_emit(
+    counts: pd.DataFrame, n_match: int, k: int, band: float | None, avgdl: float
+) -> pd.DataFrame:
+    """The emission of every pseudo-term kernel (phrase, prefix, span,
+    intervals): the salt's top-k matches by the idf-free kernel g plus
+    every match within `band` of the k-th (band None: every match), and
+    one sentinel row (doc_id=-1) carrying the salt's match count for the
+    exact global df_p (phrase_topk docstring)."""
+    if band is not None and len(counts) > k:
+        g = _phrase_g(
+            counts["phrase_tf"].to_numpy(), counts["dl"].to_numpy(), avgdl
+        )
+        order = np.lexsort((counts["doc_id"].to_numpy(), -g))
+        kth_g = g[order[k - 1]]
+        counts = counts.iloc[order[g[order] >= kth_g - band]]
+    sentinel = pd.DataFrame(
+        {
+            "doc_id": pd.Series([-1], dtype="int64"),
+            "phrase_tf": pd.Series([0], dtype="int64"),
+            "dl": pd.Series([0], dtype="int64"),
+            "dfp_part": pd.Series([n_match], dtype="int64"),
+        }
+    )
+    counts = counts.assign(dfp_part=np.int64(0))
+    return pd.concat([counts, sentinel], ignore_index=True)
+
+
+def _pseudo_term_w(n: float, avgdl: float) -> F.Column:
+    """BM25 weight of a pseudo-term row (phrase_tf, dl) given its global
+    df_p column — the phrase / span / compound global stage."""
+    return bm25_weight(
+        F.col("phrase_tf"),
+        F.col("dl"),
+        F.lit(float(avgdl)),
+        idf_col(F.lit(float(n)), F.col("df_p")),
+    )
 
 
 def _phrase_partial_group(
@@ -324,30 +378,9 @@ def _phrase_partial_group(
     )
     n_match = len(counts)
     if allowed is not None and n_match:
-        ids = counts["doc_id"].to_numpy(np.int64)
-        if allowed.size:
-            pos = np.searchsorted(allowed, ids)
-            pos[pos >= allowed.size] = 0
-            counts = counts.loc[allowed[pos] == ids]
-        else:
-            counts = counts.iloc[0:0]
-    if len(counts) > k:  # truncate on the post-filter (emittable) rows
-        g = _phrase_g(
-            counts["phrase_tf"].to_numpy(), counts["dl"].to_numpy(), avgdl
-        )
-        order = np.lexsort((counts["doc_id"].to_numpy(), -g))
-        kth_g = g[order[k - 1]]
-        counts = counts.iloc[order[g[order] >= kth_g - band]]
-    sentinel = pd.DataFrame(
-        {
-            "doc_id": pd.Series([-1], dtype="int64"),
-            "phrase_tf": pd.Series([0], dtype="int64"),
-            "dl": pd.Series([0], dtype="int64"),
-            "dfp_part": pd.Series([n_match], dtype="int64"),
-        }
-    )
-    counts = counts.assign(dfp_part=np.int64(0))
-    return pd.concat([counts, sentinel], ignore_index=True)
+        counts = counts.loc[_in_sorted(counts["doc_id"].to_numpy(np.int64), allowed)]
+    # truncate on the post-filter (emittable) rows
+    return _bounded_emit(counts, n_match, k, band, avgdl)
 
 
 def phrase_topk(
@@ -387,12 +420,10 @@ def phrase_topk(
     idfs, _avgdl0 = _collect_idfs(index, sorted(set(phrase)))
     if any(t not in idfs for t in set(phrase)):
         return empty  # a member term with zero postings: no matches anywhere
-    idf_lb = max(idfs.values())
-    band = (2.0 * 10.0 ** (-SCORE_DECIMALS) + ROUND_GUARD) / idf_lb
+    band = TIE_BAND / max(idfs.values())
     post = _postings_for_terms(index, sorted(set(phrase)))
     filt = _filters_df(index, doc_filter)  # tombstones + admitted ids
-    n, avgdl = index["stats"].select("n_docs", "avgdl").first()
-    avgdl = float(avgdl) if avgdl else 1.0
+    n, avgdl = _index_stats(index)
 
     def kernel(pdf: pd.DataFrame, tomb, allowed) -> pd.DataFrame:
         return _phrase_partial_group(
@@ -428,34 +459,12 @@ def score_pseudo_term(
     ).filter(F.col("doc_id") >= 0)
     scored = (
         matches
-        .withColumn(
-            "score",
-            F.round(
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(float(n)) - F.col("df_p") + 0.5)
-                    / (F.col("df_p") + 0.5)
-                )
-                * F.col("phrase_tf")
-                * (K1 + 1.0)
-                / (
-                    F.col("phrase_tf")
-                    + K1 * (1.0 - B + B * F.col("dl") / float(avgdl))
-                ),
-                SCORE_DECIMALS,
-            ),
-        )
+        .withColumn("score", F.round(_pseudo_term_w(n, avgdl), SCORE_DECIMALS))
         .select("doc_id", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(scored), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return _with_urls(index, scored)
 
 
 def phrase_topk_batch(
@@ -498,16 +507,13 @@ def phrase_topk_batch(
     if not live:
         return empty
     bands = {
-        qid: (2.0 * 10.0 ** (-SCORE_DECIMALS) + ROUND_GUARD)
-        / max(idfs[t] for t in ph)
-        for qid, ph in live.items()
+        qid: TIE_BAND / max(idfs[t] for t in ph) for qid, ph in live.items()
     }
     post = _postings_for_terms(
         index, sorted({t for ph in live.values() for t in ph})
     )
     filt = _filters_df(index, None)
-    n, avgdl = index["stats"].select("n_docs", "avgdl").first()
-    avgdl = float(avgdl) if avgdl else 1.0
+    n, avgdl = _index_stats(index)
 
     def kernel(pdf: pd.DataFrame, tomb, allowed) -> pd.DataFrame:
         # full-decode memo (term -> complete triple) PLUS block-granular
@@ -541,21 +547,7 @@ def phrase_topk_batch(
         "df_p", F.sum("dfp_part").over(_W.partitionBy("query_id"))
     ).filter(F.col("doc_id") >= 0)
     scored = matches.withColumn(
-        "score",
-        F.round(
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n)) - F.col("df_p") + 0.5)
-                / (F.col("df_p") + 0.5)
-            )
-            * F.col("phrase_tf")
-            * (K1 + 1.0)
-            / (
-                F.col("phrase_tf")
-                + K1 * (1.0 - B + B * F.col("dl") / float(avgdl))
-            ),
-            SCORE_DECIMALS,
-        ),
+        "score", F.round(_pseudo_term_w(n, avgdl), SCORE_DECIMALS)
     )
     from pyspark.sql import Window
 
@@ -567,13 +559,7 @@ def phrase_topk_batch(
         .filter(F.col("rn") <= k)
         .select("query_id", "doc_id", "score")
     )
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(topk), "doc_id", "inner")
-        .select("query_id", "doc_id", "url", "score")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-    )
+    return _with_urls(index, topk)
 
 
 def phrase_topk_batch_sql(
@@ -685,10 +671,12 @@ def _trim_pos_decoded(index: dict) -> None:
 def _phrase_weights(
     counts: pd.DataFrame, n: int, avgdl: float, df_p: int
 ) -> np.ndarray:
-    idf = np.log(1.0 + (n - df_p + 0.5) / (df_p + 0.5))
-    tf = counts["phrase_tf"].to_numpy(np.float64)
-    dl = counts["dl"].to_numpy(np.float64)
-    return idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+    return bm25_weight(
+        counts["phrase_tf"].to_numpy(np.float64),
+        counts["dl"].to_numpy(np.float64),
+        avgdl,
+        idf(n, df_p),
+    )
 
 
 def phrase_topk_local(
@@ -725,28 +713,15 @@ def phrase_topk_local(
     _trim_pos_decoded(index)
     if counts.empty:
         return []
-    df_p = len(counts)  # global (pre-filter) phrase df
-    allowed = _allowed_ids(index, doc_filter)
-    if allowed is not None:
-        ids = counts["doc_id"].to_numpy(np.int64)
-        if allowed.size:
-            pos = np.searchsorted(allowed, ids)
-            pos[pos >= allowed.size] = 0
-            counts = counts.loc[allowed[pos] == ids]
-        else:
-            return []
-        if counts.empty:
-            return []
-    if "_stats" not in index:
-        n, avgdl = index["stats"].select("n_docs", "avgdl").first()
-        index["_stats"] = (int(n or 0), float(avgdl) if avgdl else 1.0)
-    n, avgdl = index["_stats"]
-    w = np.round(
-        _phrase_weights(counts, n, avgdl, df_p=df_p), SCORE_DECIMALS
+    n, avgdl = _index_stats(index)
+    ids, scores = _select(
+        counts["doc_id"].to_numpy(np.int64),
+        # df_p: the global (pre-filter) phrase df
+        _phrase_weights(counts, n, avgdl, df_p=len(counts)),
+        k,
+        allowed=_allowed_ids(index, doc_filter),
     )
-    ids = counts["doc_id"].to_numpy(np.int64)
-    sel = np.lexsort((ids, -w))[: min(k, ids.size)]
-    return [(int(ids[i]), float(w[i])) for i in sel]
+    return list(zip(ids.tolist(), scores.tolist()))
 
 
 def _slop_chain_expr(phrase: list[str], slop: int) -> str:
@@ -866,14 +841,12 @@ def match_phrase_prefix_topk(
     if any(t not in idfs for t in set(required)):
         return empty
     if required:
-        idf_lb = max(idfs[t] for t in set(required))
-        band = (2.0 * 10.0 ** (-SCORE_DECIMALS) + ROUND_GUARD) / idf_lb
+        band = TIE_BAND / max(idfs[t] for t in set(required))
     else:
         band = None  # no admissible bound: emit every match
     post = _postings_for_terms(index, need)
     filt = _filters_df(index, None)
-    n, avgdl = index["stats"].select("n_docs", "avgdl").first()
-    avgdl = float(avgdl) if avgdl else 1.0
+    n, avgdl = _index_stats(index)
 
     def kernel(pdf: pd.DataFrame, tomb, allowed) -> pd.DataFrame:
         cache: dict = {}
@@ -893,24 +866,7 @@ def match_phrase_prefix_topk(
                 .groupby("doc_id", as_index=False)
                 .agg(phrase_tf=("phrase_tf", "sum"), dl=("dl", "first"))
             )
-        n_match = len(merged)
-        if band is not None and len(merged) > k:
-            g = _phrase_g(
-                merged["phrase_tf"].to_numpy(), merged["dl"].to_numpy(), avgdl
-            )
-            order = np.lexsort((merged["doc_id"].to_numpy(), -g))
-            kth_g = g[order[k - 1]]
-            merged = merged.iloc[order[g[order] >= kth_g - band]]
-        sentinel = pd.DataFrame(
-            {
-                "doc_id": pd.Series([-1], dtype="int64"),
-                "phrase_tf": pd.Series([0], dtype="int64"),
-                "dl": pd.Series([0], dtype="int64"),
-                "dfp_part": pd.Series([n_match], dtype="int64"),
-            }
-        )
-        merged = merged.assign(dfp_part=np.int64(0))
-        return pd.concat([merged, sentinel], ignore_index=True)
+        return _bounded_emit(merged, len(merged), k, band, avgdl)
 
     partial = _salt_scored(
         post, filt, False, kernel,

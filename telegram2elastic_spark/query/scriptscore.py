@@ -308,13 +308,16 @@ def script_score_topk(
 def _script_indexed(
     index: dict, terms: list[str], ast, k: int, min_score: float | None
 ) -> DataFrame:
+    from .funcscore import _doc_values_side
     from .wand import (
+        _EMPTY,
         _collect_idfs,
-        _filters_df,
-        _n_parts,
         _postings_for_terms,
         _score_salt_group,
+        _select,
         _split_filters,
+        _topk_frame,
+        _with_urls,
     )
 
     spark = index["doc_map"].sparkSession
@@ -324,25 +327,7 @@ def _script_indexed(
         return empty
 
     post = _postings_for_terms(index, sorted(idfs))
-    filt = _filters_df(index, None)
-    side = index["doc_map"].select(
-        "doc_id",
-        F.col("warc_ts").cast("long").alias("epoch"),
-        F.col("doc_len").cast("long").alias("doc_len"),
-        F.lit("h").alias("kind"),
-    )
-    if filt is not None:
-        side = side.unionByName(
-            filt.select(
-                "doc_id",
-                F.lit(None).cast("long").alias("epoch"),
-                F.lit(None).cast("long").alias("doc_len"),
-                "kind",
-            )
-        )
-    side = side.withColumn(
-        "salt", F.pmod(F.col("doc_id"), F.lit(_n_parts(index))).cast("int")
-    )
+    side = _doc_values_side(index)
 
     def kernel(post_pdf: pd.DataFrame, side_pdf: pd.DataFrame) -> pd.DataFrame:
         dv = side_pdf.loc[side_pdf["kind"] == "h", ["doc_id", "epoch", "doc_len"]]
@@ -351,12 +336,7 @@ def _script_indexed(
             post_pdf, idfs, float(avgdl), 1 << 60, tombstones=tomb
         )
         if scored.empty:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
-            )
+            return _EMPTY.copy()
         m = scored.merge(dv, on="doc_id", how="left")
         final = np.round(
             to_numpy(
@@ -369,26 +349,19 @@ def _script_indexed(
             ),
             SCORE_DECIMALS,
         )
-        ids = m["doc_id"].to_numpy()
+        ids = m["doc_id"].to_numpy(np.int64)
         if min_score is not None:
             keep_mask = final >= float(min_score)
             ids, final = ids[keep_mask], final[keep_mask]
-        order = np.lexsort((ids, -final))
-        keep = order[:k]
-        return pd.DataFrame({"doc_id": ids[keep], "score": final[keep]})
+        return _topk_frame(*_select(ids, final, k))
 
     local = (
         post.groupBy("salt")
         .cogroup(side.groupBy("salt"))
         .applyInPandas(kernel, "doc_id long, score double")
     )
-    top = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(top), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    return _with_urls(
+        index, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
     )
 
 
@@ -493,7 +466,7 @@ def script_score_topk_local(
     resident postings (dl rides in every block — no doc-values fetch);
     `epoch` reads the resident doc-values column (_epoch_docvalues).
     """
-    from .wand import _collect_idfs, _term_arrays, wand_topk_local
+    from .wand import _collect_idfs, _select, _term_arrays, wand_topk_local
 
     ast = parse_script(script)
     full = wand_topk_local(index, terms, k=1 << 60)
@@ -525,8 +498,8 @@ def script_score_topk_local(
     if min_score is not None:
         keep = final >= float(min_score)
         ids, final = ids[keep], final[keep]
-    top = np.lexsort((ids, -final))[: int(k)]
-    return [(int(i), float(s)) for i, s in zip(ids[top], final[top])]
+    ids, final = _select(ids, final, int(k))
+    return list(zip(ids.tolist(), final.tolist()))
 
 
 # --- script_fields + script sort (ES `_search` script surface) -------------

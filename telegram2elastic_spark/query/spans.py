@@ -42,14 +42,14 @@ from pyspark.sql import functions as F
 
 from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import TOKEN_SPLIT_RE
-from .bm25 import ROUND_GUARD, SCORE_DECIMALS
+from .bm25 import SCORE_DECIMALS, TIE_BAND, idf
 from .phrase import (
+    _bounded_emit,
     _decode_term_blocks,
     _EMPTY_COUNTS,
-    _phrase_g,
     score_pseudo_term,
 )
-from .wand import _postings_for_terms, _salt_scored
+from .wand import _filters_df, _index_stats, _postings_for_terms, _salt_scored
 
 
 def _span_first_counts(
@@ -146,30 +146,6 @@ def _span_near_counts(
     )
 
 
-def _span_partial(
-    counts: pd.DataFrame, k: int, band: float, avgdl: float
-) -> pd.DataFrame:
-    """Bounded emission + df sentinel (phrase.py contract)."""
-    n_match = len(counts)
-    if len(counts) > k:
-        g = _phrase_g(
-            counts["phrase_tf"].to_numpy(), counts["dl"].to_numpy(), avgdl
-        )
-        order = np.lexsort((counts["doc_id"].to_numpy(), -g))
-        kth_g = g[order[k - 1]]
-        counts = counts.iloc[order[g[order] >= kth_g - band]]
-    sentinel = pd.DataFrame(
-        {
-            "doc_id": pd.Series([-1], dtype="int64"),
-            "phrase_tf": pd.Series([0], dtype="int64"),
-            "dl": pd.Series([0], dtype="int64"),
-            "dfp_part": pd.Series([n_match], dtype="int64"),
-        }
-    )
-    counts = counts.assign(dfp_part=np.int64(0))
-    return pd.concat([counts, sentinel], ignore_index=True)
-
-
 def _run_span(
     index: dict,
     terms: list[str],
@@ -194,30 +170,18 @@ def _run_span(
     if any(t not in idfs for t in req) or not idfs:
         return empty
     if band is None:
-        band = (2.0 * 10.0 ** (-SCORE_DECIMALS) + ROUND_GUARD) / max(
-            idfs[t] for t in (req or set(idfs))
-        )
+        band = TIE_BAND / max(idfs[t] for t in (req or set(idfs)))
     post = _postings_for_terms(index, sorted(set(terms)))
     if not need_positions and "pos_bytes" in post.columns:
         post = post.drop("pos_bytes")
-    n, avgdl = index["stats"].select("n_docs", "avgdl").first()
-    avgdl = float(avgdl) if avgdl else 1.0
-    from .wand import _tomb_df
-
-    tomb = _tomb_df(index)
-    filt = None
-    if tomb is not None:
-        from .wand import _n_parts
-
-        filt = tomb.select("doc_id", F.lit("t").alias("kind")).withColumn(
-            "salt", F.pmod(F.col("doc_id"), F.lit(_n_parts(index))).cast("int")
-        )
+    n, avgdl = _index_stats(index)
 
     def kernel(pdf: pd.DataFrame, tombstones, _allowed) -> pd.DataFrame:
-        return _span_partial(counts_fn(pdf, tombstones), k, band, avgdl)
+        counts = counts_fn(pdf, tombstones)
+        return _bounded_emit(counts, len(counts), k, band, avgdl)
 
     partial = _salt_scored(
-        post, filt, False, kernel,
+        post, _filters_df(index, None), False, kernel,
         "doc_id long, phrase_tf long, dl long, dfp_part long",
     )
     return score_pseudo_term(index, partial, k, float(n), avgdl)
@@ -447,8 +411,7 @@ def span_or_topk(index: dict, terms: list[str], k: int = 10) -> DataFrame:
         for r in (np.expm1(i) for i in idfs.values())
     ]
     df_ub = min(n, sum(dfs))
-    idf_lb = float(np.log1p((n - df_ub + 0.5) / (df_ub + 0.5)))
-    band = (2.0 * 10.0 ** (-SCORE_DECIMALS) + ROUND_GUARD) / idf_lb
+    band = TIE_BAND / float(idf(n, df_ub))
     return _run_span(
         index, sorted(set(terms)), k,
         lambda pdf, t: _span_or_counts(pdf, terms, t),
@@ -834,7 +797,7 @@ def field_masking_span_topk(
         labels.append(f"{f}:{tl}")
         idf_vals.append(idfs[tl])
     n, avgdl = primary["_stats"]
-    band = (2.0 * 10.0 ** (-SCORE_DECIMALS) + ROUND_GUARD) / max(idf_vals)
+    band = TIE_BAND / max(idf_vals)
 
     post = None
     for (f, t), label in zip(clauses, labels):
@@ -847,27 +810,16 @@ def field_masking_span_topk(
             p, allowMissingColumns=True
         )
 
-    from .wand import _tomb_df
-
-    tomb = _tomb_df(primary)
-    filt = None
-    if tomb is not None:
-        filt = tomb.select("doc_id", F.lit("t").alias("kind")).withColumn(
-            "salt",
-            F.pmod(F.col("doc_id"), F.lit(_n_parts(primary))).cast("int"),
-        )
-
     dl_label = labels[0]
 
     def kernel(pdf: pd.DataFrame, tombstones, _allowed) -> pd.DataFrame:
-        return _span_partial(
-            _span_near_counts(pdf, labels, slop, tombstones,
-                              dl_label=dl_label),
-            k, band, avgdl,
+        counts = _span_near_counts(
+            pdf, labels, slop, tombstones, dl_label=dl_label
         )
+        return _bounded_emit(counts, len(counts), k, band, avgdl)
 
     partial = _salt_scored(
-        post, filt, False, kernel,
+        post, _filters_df(primary, None), False, kernel,
         "doc_id long, phrase_tf long, dl long, dfp_part long",
     )
     return score_pseudo_term(primary, partial, k, float(n), avgdl)

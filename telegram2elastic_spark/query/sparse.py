@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import DOC_LEN_SQL, TOKEN_SPLIT_RE, tokens
-from .bm25 import B, K1, SCORE_DECIMALS
+from .bm25 import B, K1, SCORE_DECIMALS, bm25_weight
 
 
 def _check_weights(weights: dict[str, float]) -> dict[str, float]:
@@ -82,8 +82,7 @@ def sparse_vector_topk_relational(
         tf.crossJoin(F.broadcast(stats))
         .withColumn(
             "contrib",
-            wexpr * F.col("tf") * (K1 + 1.0)
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.col("avgdl"))),
+            bm25_weight(F.col("tf"), F.col("dl"), F.col("avgdl"), wexpr),
         )
         .groupBy("doc_id", "url")
         .agg(F.round(F.sum("contrib"), SCORE_DECIMALS).alias("score"))

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import DOC_LEN_SQL, TOKEN_SPLIT_RE
 from ..index.codec import decode_many
-from .bm25 import B, K1, ROUND_GUARD, SCORE_DECIMALS, _sql_quote_terms
+from .bm25 import B, K1, SCORE_DECIMALS, TIE_BAND, _sql_quote_terms, tf_saturation
 
 
 def _decode_group(groups_pdf: dict, members: list[str]):
@@ -74,6 +74,44 @@ def _decode_group(groups_pdf: dict, members: list[str]):
     return uniq, np.add.reduceat(tf, starts), dl[starts]
 
 
+def _group_scores(
+    by_term: dict, group_idfs: list[tuple[list[str], float]], avgdl: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """SynonymQuery scoring of decoded-ready blocks ({term: blocks sorted
+    by block_id}): per group, member tfs summed before saturation, times
+    the group idf; groups summed per doc in group order.  -> (sorted doc
+    ids, unrounded scores)."""
+    all_ids, all_contrib = [], []
+    for members, idf_g in group_idfs:
+        ids, tf, dl = _decode_group(by_term, members)
+        if ids.size:
+            all_ids.append(ids)
+            all_contrib.append(
+                idf_g * tf_saturation(
+                    tf.astype(np.float64), dl.astype(np.float64), avgdl
+                )
+            )
+    if not all_ids:
+        return np.array([], dtype=np.int64), np.array([], dtype=np.float64)
+    ids = np.concatenate(all_ids)
+    contrib = np.concatenate(all_contrib)
+    order = np.argsort(ids, kind="stable")
+    ids, contrib = ids[order], contrib[order]
+    uniq, starts = np.unique(ids, return_index=True)
+    return uniq, np.add.reduceat(contrib, starts)
+
+
+def _group_idfs(idfs: dict, groups: list[list[str]]) -> list:
+    """Live groups with their idf: max member df == min member idf (idf
+    is decreasing in df), so no df lookup beyond the member idfs."""
+    out = []
+    for g in groups:
+        live = [t for t in g if t in idfs]
+        if live:
+            out.append((live, min(idfs[t] for t in live)))
+    return out
+
+
 def synonym_match_topk(
     index: dict, groups: list[list[str]], k: int = 10
 ) -> DataFrame:
@@ -82,10 +120,12 @@ def synonym_match_topk(
     a plain term); disjunction across groups, SynonymQuery blending
     within a group (module docstring)."""
     from .wand import (
+        _EMPTY,
         _collect_idfs,
         _filters_df,
         _postings_for_terms,
-        _split_filters,
+        _salt_scored,
+        _with_urls,
     )
 
     spark = index["doc_map"].sparkSession
@@ -94,79 +134,34 @@ def synonym_match_topk(
     members = sorted({t for g in norm_groups for t in g})
     if not members:
         return empty
-    # member idfs prime the df cache; group idf derives from max df,
-    # recovered from the member idf by inverting the formula (exact
-    # algebra — max df == min idf, so idf_g = min member idf)
     idfs, avgdl = _collect_idfs(index, members)
-    n = float(index["_stats"][0])
-    group_idfs: list[tuple[list[str], float]] = []
-    for g in norm_groups:
-        live = [t for t in g if t in idfs]
-        if live:
-            group_idfs.append((live, min(idfs[t] for t in live)))
+    group_idfs = _group_idfs(idfs, norm_groups)
     if not group_idfs:
         return empty
 
     post = _postings_for_terms(index, members)
     if "pos_bytes" in post.columns:
         post = post.drop("pos_bytes")
-    filt = _filters_df(index, None)
-    side = filt
-    if side is None:
-        side = spark.createDataFrame(
-            [], "doc_id long, kind string, salt int"
-        )
-    guard = 2.0 * 10.0 ** (-SCORE_DECIMALS) + ROUND_GUARD
-
-    def kernel(post_pdf: pd.DataFrame, side_pdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame(
-            {
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
+    def kernel(post_pdf: pd.DataFrame, tomb, _allowed) -> pd.DataFrame:
         if post_pdf.empty:
-            return out_empty
+            return _EMPTY.copy()
         by_term = {
             t: g.sort_values("block_id")
             for t, g in post_pdf.groupby("term", sort=False)
         }
-        tomb, _ = _split_filters(side_pdf, has_allow=False)
-        all_ids, all_contrib = [], []
-        for g_members, idf_g in group_idfs:
-            ids, tf, dl = _decode_group(by_term, g_members)
-            if not ids.size:
-                continue
-            tff = tf.astype(np.float64)
-            sat = (
-                tff * (K1 + 1.0)
-                / (tff + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
-            )
-            all_ids.append(ids)
-            all_contrib.append(idf_g * sat)
-        if not all_ids:
-            return out_empty
-        ids = np.concatenate(all_ids)
-        contrib = np.concatenate(all_contrib)
-        order = np.argsort(ids, kind="stable")
-        ids, contrib = ids[order], contrib[order]
-        uniq, starts = np.unique(ids, return_index=True)
-        score = np.add.reduceat(contrib, starts)
+        uniq, score = _group_scores(by_term, group_idfs, avgdl)
         if tomb is not None and tomb.size:
             live = ~np.isin(uniq, tomb)
             uniq, score = uniq[live], score[live]
-        if not uniq.size:
-            return out_empty
         if uniq.size > k:
             kth = np.partition(score, uniq.size - k)[uniq.size - k]
-            keep = score >= kth - guard
+            keep = score >= kth - TIE_BAND
             uniq, score = uniq[keep], score[keep]
         return pd.DataFrame({"doc_id": uniq, "score": score})
 
-    local = (
-        post.groupBy("salt")
-        .cogroup(side.groupBy("salt"))
-        .applyInPandas(kernel, "doc_id long, score double")
+    local = _salt_scored(
+        post, _filters_df(index, None), False, kernel,
+        "doc_id long, score double",
     )
     top = (
         local.select(
@@ -175,13 +170,7 @@ def synonym_match_topk(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(int(k))
     )
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(top), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return _with_urls(index, top)
 
 
 def synonym_match_sql(groups: list[list[str]], k: int = 10) -> str:

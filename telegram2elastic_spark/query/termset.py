@@ -39,8 +39,7 @@ from pyspark.sql import functions as F
 
 from ..corpus import CORPUS_CTE
 from ..functions.tokenizer import DOC_LEN_SQL, TOKEN_SPLIT_RE
-from ..index.codec import decode_many
-from .bm25 import B, K1, SCORE_DECIMALS
+from .bm25 import B, K1, SCORE_DECIMALS, idf, tf_saturation
 
 # Default per-doc threshold: the ES minimum_should_match_field, derived
 # deterministically so the DuckDB oracle computes the identical bar.
@@ -48,52 +47,14 @@ REQUIRED_EXPR = "1 + pmod(doc_id, 3)"
 REQUIRED_SQL = "1 + (doc_id % 3)"
 
 
-def _decode_terms(post_pdf: pd.DataFrame, terms: set[str]):
-    """One salt's blocks for `terms` -> {term: (ids, tfs, dls)} arrays."""
-    out = {}
-    for term, g in post_pdf.groupby("term", sort=False):
-        if term not in terms:
-            continue
-        g = g.sort_values("block_id")
-        ids, tfs, dls = decode_many(
-            [bytes(x) for x in g["doc_gaps"]],
-            [bytes(x) for x in g["tf_bytes"]],
-            [bytes(x) for x in g["dl_bytes"]],
-            g["n_docs"].to_numpy(),
-        )
-        out[term] = (
-            ids.astype(np.int64),
-            tfs.astype(np.float64),
-            dls.astype(np.float64),
-        )
-    return out
-
-
 def _collect_dfs(index: dict, terms: list[str]) -> tuple[dict, int, float]:
-    """(term -> df, N, avgdl) with the same bucket-pruned term_dict scan
-    the idf cache uses (query/wand.py _collect_idfs)."""
-    from .wand import _bucketed
+    """(term -> df, N, avgdl) from the same term_dict lookup the idf
+    cache uses (query/wand.py _term_dfs)."""
+    from .wand import _index_stats, _term_dfs
 
-    if "_stats" not in index:
-        n, avgdl = index["stats"].select("n_docs", "avgdl").first()
-        index["_stats"] = (int(n or 0), float(avgdl) if avgdl else 1.0)
-    n, avgdl = index["_stats"]
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in _bucketed(index, index["term_dict"], terms)
-        .filter(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    }
+    dfs = _term_dfs(index, terms)
+    n, avgdl = _index_stats(index)
     return dfs, n, avgdl
-
-
-def _bm25_tf(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
-    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-
-
-def _idf(n: int, df: int) -> float:
-    return float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
 
 
 def terms_set_topk(
@@ -105,7 +66,16 @@ def terms_set_topk(
     """Top-k (doc_id, url, score) among docs matching >= required(doc)
     distinct candidate terms; `required_expr` is any SQL expression over
     doc_map columns (the stored ES minimum_should_match_field)."""
-    from .wand import _n_parts, _postings_for_terms, _tomb_df
+    from .wand import (
+        _EMPTY,
+        _decode,
+        _n_parts,
+        _postings_for_terms,
+        _select,
+        _tomb_df,
+        _topk_frame,
+        _with_urls,
+    )
 
     spark = index["doc_map"].sparkSession
     dfs, n, avgdl = _collect_dfs(index, sorted(set(terms)))
@@ -113,7 +83,7 @@ def terms_set_topk(
     live = sorted(t for t in set(terms) if t in dfs)
     if not live:
         return empty
-    idfs = {t: _idf(n, dfs[t]) for t in live}
+    idfs = {t: float(idf(n, dfs[t])) for t in live}
 
     post = _postings_for_terms(index, live)
     side = index["doc_map"].select(
@@ -133,54 +103,34 @@ def terms_set_topk(
     side = side.withColumn(
         "salt", F.pmod(F.col("doc_id"), F.lit(_n_parts(index))).cast("int")
     )
-    live_set = set(live)
 
     def kernel(post_pdf: pd.DataFrame, side_pdf: pd.DataFrame) -> pd.DataFrame:
-        req = side_pdf.loc[side_pdf["kind"] == "h", ["doc_id", "required"]]
+        req = side_pdf.loc[side_pdf["kind"] == "h"].set_index("doc_id")
         tomb_ids = np.sort(
             side_pdf.loc[side_pdf["kind"] == "t", "doc_id"].to_numpy(np.int64)
         )
-        decoded = _decode_terms(post_pdf, live_set)
-        if not decoded:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
-            )
-        all_ids = np.concatenate([v[0] for v in decoded.values()])
-        all_w = np.concatenate(
-            [
-                idfs[t] * _bm25_tf(tfs, dls, avgdl)
-                for t, (ids, tfs, dls) in decoded.items()
-            ]
-        )
+        parts = [
+            (g, idfs[t]) for t, g in post_pdf.groupby("term", sort=False)
+        ]
+        if not parts:
+            return _EMPTY.copy()
+        ids_w = []
+        for g, idf_t in parts:
+            ids, tfs, dls = _decode(g.sort_values("block_id"))
+            ids_w.append((ids, idf_t * tf_saturation(tfs, dls, avgdl)))
+        all_ids = np.concatenate([a for a, _ in ids_w])
+        all_w = np.concatenate([w for _, w in ids_w])
         order = np.argsort(all_ids, kind="stable")
         all_ids, all_w = all_ids[order], all_w[order]
         uniq, starts = np.unique(all_ids, return_index=True)
-        scores = np.add.reduceat(all_w, starts)
-        hits = np.diff(np.append(starts, all_ids.size))
-        if tomb_ids.size:
-            livem = ~np.isin(uniq, tomb_ids)
-            uniq, scores, hits = uniq[livem], scores[livem], hits[livem]
-        m = pd.DataFrame({"doc_id": uniq, "score": scores, "hits": hits}).merge(
-            req, on="doc_id", how="left"
-        )
-        m = m[m["hits"] >= m["required"]]
-        if m.empty:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
+        # the per-doc bar (NaN for a doc without a doc_map row: never met)
+        bar = req["required"].reindex(uniq).to_numpy(np.float64)
+        return _topk_frame(
+            *_select(
+                uniq, np.add.reduceat(all_w, starts), k,
+                hits=np.diff(np.append(starts, all_ids.size)),
+                require_all=bar, tombstones=tomb_ids,
             )
-        rounded = np.round(m["score"].to_numpy(), SCORE_DECIMALS)
-        order = np.lexsort((m["doc_id"].to_numpy(), -rounded))[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": m["doc_id"].to_numpy()[order],
-                "score": rounded[order],
-            }
         )
 
     local = (
@@ -188,13 +138,8 @@ def terms_set_topk(
         .cogroup(side.groupBy("salt"))
         .applyInPandas(kernel, "doc_id long, score double")
     )
-    top = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(top), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    return _with_urls(
+        index, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     )
 
 
@@ -245,7 +190,15 @@ def synonym_topk(
     """Top-k (doc_id, url, score) where each synonym group scores as one
     pseudo-term (tf = member sum, df = member max — module docstring) and
     the query score sums the groups."""
-    from .wand import _n_parts, _postings_for_terms, _tomb_df
+    from .synonyms import _group_scores
+    from .wand import (
+        _filters_df,
+        _postings_for_terms,
+        _salt_scored,
+        _select,
+        _topk_frame,
+        _with_urls,
+    )
 
     spark = index["doc_map"].sparkSession
     all_terms = sorted({t for g in groups for t in g})
@@ -255,76 +208,27 @@ def synonym_topk(
     for g in groups:
         members = sorted({t for t in g if t in dfs})
         if members:
-            live_groups.append((members, _idf(n, max(dfs[t] for t in members))))
+            live_groups.append(
+                (members, float(idf(n, max(dfs[t] for t in members))))
+            )
     if not live_groups:
         return empty
-
     scan_terms = sorted({t for members, _ in live_groups for t in members})
-    post = _postings_for_terms(index, scan_terms)
-    tomb = _tomb_df(index)
-    if tomb is not None:
-        # tombstones via cogroup (salt-aligned) like the wand path
-        tomb = tomb.withColumn(
-            "salt", F.pmod(F.col("doc_id"), F.lit(_n_parts(index))).cast("int")
-        )
 
-    def score_salt(post_pdf: pd.DataFrame, tomb_pdf: pd.DataFrame | None) -> pd.DataFrame:
-        decoded = _decode_terms(post_pdf, set(scan_terms))
-        acc_ids = np.array([], dtype=np.int64)
-        acc_sc = np.array([], dtype=np.float64)
-        for members, idf_g in live_groups:
-            parts = [decoded[t] for t in members if t in decoded]
-            if not parts:
-                continue
-            ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
-            order = np.argsort(ids, kind="stable")
-            ids, tfs, dls = ids[order], tfs[order], dls[order]
-            uniq, starts = np.unique(ids, return_index=True)
-            tf_g = np.add.reduceat(tfs, starts)
-            dl_g = dls[starts]
-            w = idf_g * _bm25_tf(tf_g, dl_g, avgdl)
-            all_ids = np.concatenate([acc_ids, uniq])
-            all_sc = np.concatenate([acc_sc, w])
-            order = np.argsort(all_ids, kind="stable")
-            all_ids, all_sc = all_ids[order], all_sc[order]
-            uniq2, starts2 = np.unique(all_ids, return_index=True)
-            acc_ids, acc_sc = uniq2, np.add.reduceat(all_sc, starts2)
-        if acc_ids.size == 0:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                }
-            )
-        if tomb_pdf is not None and len(tomb_pdf):
-            t_ids = np.sort(tomb_pdf["doc_id"].to_numpy(np.int64))
-            livem = ~np.isin(acc_ids, t_ids)
-            acc_ids, acc_sc = acc_ids[livem], acc_sc[livem]
-        rounded = np.round(acc_sc, SCORE_DECIMALS)
-        order = np.lexsort((acc_ids, -rounded))[:k]
-        return pd.DataFrame({"doc_id": acc_ids[order], "score": rounded[order]})
+    def kernel(post_pdf: pd.DataFrame, tomb, _allowed) -> pd.DataFrame:
+        by_term = {
+            t: g.sort_values("block_id")
+            for t, g in post_pdf.groupby("term", sort=False)
+        }
+        ids, scores = _group_scores(by_term, live_groups, avgdl)
+        return _topk_frame(*_select(ids, scores, k, tombstones=tomb))
 
-    if tomb is not None:
-        local = (
-            post.groupBy("salt")
-            .cogroup(tomb.groupBy("salt"))
-            .applyInPandas(
-                lambda p, t: score_salt(p, t), "doc_id long, score double"
-            )
-        )
-    else:
-        local = post.groupBy("salt").applyInPandas(
-            lambda p: score_salt(p, None), "doc_id long, score double"
-        )
-    top = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(top), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    local = _salt_scored(
+        _postings_for_terms(index, scan_terms), _filters_df(index, None),
+        False, kernel, "doc_id long, score double",
+    )
+    return _with_urls(
+        index, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     )
 
 

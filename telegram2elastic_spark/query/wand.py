@@ -27,6 +27,7 @@ per-block bound (block-max metadata from codec.encode_blocks).
 from __future__ import annotations
 
 import os
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -34,22 +35,101 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.codec import decode_many, delta_decode, varbyte_decode
-from .bm25 import B, K1, ROUND_GUARD, SCORE_DECIMALS
+from .bm25 import (
+    SCORE_DECIMALS,
+    ROUND_GUARD,
+    QuerySpec,
+    bm25_weight,
+    idf as bm25_idf,
+    query_spec,
+    upper_bound,
+)
 
-
-def _bm25_w(tf: np.ndarray, dl: np.ndarray, avgdl: float, idf: float) -> np.ndarray:
-    tf = tf.astype(np.float64)
-    return idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-
-
-def _term_ub(idf: float, max_tf: int) -> float:
-    mtf = float(max_tf)
-    return idf * mtf * (K1 + 1.0) / (mtf + K1 * (1.0 - B))
-
+_term_ub = upper_bound  # the name query/bmw.py imports
 
 _EMPTY = pd.DataFrame(
     {"doc_id": pd.Series([], dtype="int64"), "score": pd.Series([], dtype="float64")}
 )
+
+
+def _in_sorted(ids: np.ndarray, sorted_ids: np.ndarray) -> np.ndarray:
+    """Membership mask of `ids` in a sorted id array (searchsorted) — the
+    doc_filter test every scoring path shares."""
+    if sorted_ids.size == 0:
+        return np.zeros(ids.shape, dtype=bool)
+    pos = np.searchsorted(sorted_ids, ids)
+    pos[pos >= sorted_ids.size] = 0
+    return sorted_ids[pos] == ids
+
+
+def _live_mask(
+    ids: np.ndarray, tombstones: np.ndarray | None, allowed: np.ndarray | None
+) -> np.ndarray | None:
+    """Mask of ids neither tombstoned nor outside the doc_filter's
+    admitted set; None when nothing is masked."""
+    keep = None
+    if tombstones is not None and tombstones.size:
+        keep = ~np.isin(ids, tombstones)
+    if allowed is not None:
+        ok = _in_sorted(ids, allowed)
+        keep = ok if keep is None else keep & ok
+    return keep
+
+
+def _select(
+    ids: np.ndarray,
+    sums: np.ndarray,
+    k: int,
+    hits: np.ndarray | None = None,
+    require_all=0,
+    tombstones: np.ndarray | None = None,
+    allowed: np.ndarray | None = None,
+    after: tuple[float, int] | None = None,
+    raw_scores: bool = False,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The selection tail of every index-backed ranker: accumulated
+    (doc_id, score sum) -> top-k by (rounded score desc, doc_id asc).
+
+    Scores are rounded BEFORE selection so a partition-local cut uses the
+    same order as the global merge (a float-noise "tie" can never drop
+    the wrong doc at a partition boundary).  Masks, in order: tombstones
+    and must_not ids, the doc_filter's admitted set, the matched-term bar
+    (`require_all`, an int or a per-doc array compared with `hits`), and
+    the search_after cursor — only docs STRICTLY after (score, doc_id) in
+    the ranking order.  `raw_scores` emits the unrounded sums of the
+    selected docs (compound callers round once after combining)."""
+    keep = _live_mask(ids, tombstones, allowed)
+    if np.ndim(require_all) or require_all:
+        bar = hits >= require_all
+        keep = bar if keep is None else keep & bar
+    if keep is not None:
+        ids, sums = ids[keep], sums[keep]
+    rounded = np.round(sums, SCORE_DECIMALS)
+    if after is not None:
+        a_score, a_doc = float(after[0]), int(after[1])
+        m = (rounded < a_score) | ((rounded == a_score) & (ids > a_doc))
+        ids, sums, rounded = ids[m], sums[m], rounded[m]
+    if ids.size > 4096 and 0 < k < ids.size:
+        # prune to the rounded top-k band (ties kept) before the lexsort
+        m = rounded >= np.partition(rounded, ids.size - k)[ids.size - k]
+        ids, sums, rounded = ids[m], sums[m], rounded[m]
+    top = np.lexsort((ids, -rounded))[:k]
+    return ids[top], (sums if raw_scores else rounded)[top]
+
+
+def _topk_frame(ids: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": ids, "score": scores})
+
+
+def _decode(g: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One term's blocks -> (ids int64, tfs float64, dls float64)."""
+    ids, tfs, dls = decode_many(
+        [bytes(x) for x in g["doc_gaps"]],
+        [bytes(x) for x in g["tf_bytes"]],
+        [bytes(x) for x in g["dl_bytes"]],
+        g["n_docs"].to_numpy(),
+    )
+    return ids.astype(np.int64), tfs.astype(np.float64), dls.astype(np.float64)
 
 
 def _score_salt_group(
@@ -71,21 +151,17 @@ def _score_salt_group(
     `allowed`: optional sorted int64 ids a document-level filter admits
     (ES filter-context: restricts scored docs, never changes idf); at real
     scale this is a broadcast bitmap, here a sorted array + searchsorted.
-    `raw_scores`: emit unrounded BM25 sums (selection/order still uses the
-    rounded key so truncation agrees with the global rounded merge) — for
-    callers that combine the sums with other clauses before rounding once
-    (compound queries).
+    Both masks apply before accumulation, so the MaxScore threshold only
+    ever sees scorable docs.
+    `raw_scores`: emit unrounded BM25 sums (see _select).
     `weights` / `avgdls` (optional, keyed like idfs): per-term score
     multiplier and length-norm denominator — the multi_match most_fields
     path scores several field indexes in one kernel by keying terms as
     field+term; every upper bound scales by the weight, so MaxScore
     pruning stays exact across fields.
-    `after`: ES search_after cursor (rounded_score, doc_id) — only docs
-    STRICTLY after the cursor in (score desc, doc_id asc) order are
-    selectable.  Cursor docs may rank below the unfiltered top-k, so
-    candidate-generation pruning is disabled (full accumulation, like
-    require_all); the cursor mask applies to the rounded scores right
-    before selection so it agrees with the global rounded merge."""
+    `after`: ES search_after cursor (rounded_score, doc_id).  Cursor docs
+    may rank below the unfiltered top-k, so candidate-generation pruning
+    is disabled (full accumulation, like require_all)."""
     if post.empty:
         return _EMPTY.copy()
 
@@ -96,7 +172,7 @@ def _score_salt_group(
         idf = idfs[term]
         wgt = weights.get(term, 1.0) if weights else 1.0
         av = avgdls[term] if avgdls else avgdl
-        ub = wgt * _term_ub(idf, int(g["block_max_tf"].max()))
+        ub = upper_bound(wgt * idf, float(g["block_max_tf"].max()))
         terms.append((ub, term, (idf, wgt, av), g))
     terms.sort(key=lambda x: -x[0])
     ubs = np.array([t[0] for t in terms])
@@ -132,8 +208,9 @@ def _score_salt_group(
             # block-max skipping: keep only blocks that overlap an existing
             # accumulator (range check via searchsorted) and whose bound can
             # still lift an accumulated doc into the top-k.
-            mtf = g["block_max_tf"].to_numpy(dtype=np.float64)
-            bubs = wgt * idf * mtf * (K1 + 1.0) / (mtf + K1 * (1.0 - B))
+            bubs = upper_bound(
+                wgt * idf, g["block_max_tf"].to_numpy(dtype=np.float64)
+            )
             lo = np.searchsorted(acc_ids, firsts, side="left")
             hi = np.searchsorted(acc_ids, lasts, side="right")
             overlaps = hi > lo
@@ -141,26 +218,10 @@ def _score_salt_group(
             keep = overlaps & (bubs + acc_max + rem_ub[j + 1] >= theta - ROUND_GUARD)
         if not keep.any():
             continue
-        kept = g.loc[keep]
-        ids, tfs, dls = decode_many(
-            [bytes(x) for x in kept["doc_gaps"]],
-            [bytes(x) for x in kept["tf_bytes"]],
-            [bytes(x) for x in kept["dl_bytes"]],
-            kept["n_docs"].to_numpy(),
-        )
-        ids = ids.astype(np.int64)
-        tfs = tfs.astype(np.float64)
-        dls = dls.astype(np.float64)
-        if tombstones is not None and tombstones.size:
-            live = ~np.isin(ids, tombstones)
+        ids, tfs, dls = _decode(g.loc[keep])
+        live = _live_mask(ids, tombstones, allowed)
+        if live is not None:
             ids, tfs, dls = ids[live], tfs[live], dls[live]
-            if ids.size == 0:
-                continue
-        if allowed is not None:
-            pos = np.searchsorted(allowed, ids)
-            pos[pos >= allowed.size] = 0
-            ok = allowed[pos] == ids if allowed.size else np.zeros(ids.shape, bool)
-            ids, tfs, dls = ids[ok], tfs[ok], dls[ok]
             if ids.size == 0:
                 continue
         if not allow_new:
@@ -168,7 +229,7 @@ def _score_salt_group(
             if not mask.any():
                 continue
             ids, tfs, dls = ids[mask], tfs[mask], dls[mask]
-        w = wgt * _bm25_w(tfs, dls, av, idf)
+        w = wgt * bm25_weight(tfs, dls, av, idf)
         # merge into accumulators (sorted union)
         all_ids = np.concatenate([acc_ids, ids])
         all_sc = np.concatenate([acc_scores, w])
@@ -180,29 +241,12 @@ def _score_salt_group(
         hits = np.add.reduceat(all_h, starts)
         acc_ids, acc_scores, acc_hits = uniq, sums, hits
 
-    if require_all:
-        keep = acc_hits >= require_all
-        acc_ids, acc_scores = acc_ids[keep], acc_scores[keep]
-    if acc_ids.size == 0:
-        return _EMPTY.copy()
-    # Round BEFORE local top-k selection so partition-local truncation uses
-    # the same (rounded score, doc_id) order as the global merge — otherwise
-    # a float-noise "tie" could drop the wrong doc at the partition boundary.
-    rounded = np.round(acc_scores, SCORE_DECIMALS)
-    if after is not None:
-        a_score, a_doc = float(after[0]), int(after[1])
-        keep = (rounded < a_score) | (
-            (rounded == a_score) & (acc_ids > a_doc)
+    return _topk_frame(
+        *_select(
+            acc_ids, acc_scores, k, hits=acc_hits, require_all=require_all,
+            after=after, raw_scores=raw_scores,
         )
-        acc_ids, acc_scores, rounded = (
-            acc_ids[keep], acc_scores[keep], rounded[keep]
-        )
-        if acc_ids.size == 0:
-            return _EMPTY.copy()
-    top = min(k, acc_ids.size)
-    order = np.lexsort((acc_ids, -rounded))[:top]
-    out_scores = acc_scores if raw_scores else rounded
-    return pd.DataFrame({"doc_id": acc_ids[order], "score": out_scores[order]})
+    )
 
 
 def _decode_ids_only(g: pd.DataFrame) -> np.ndarray:
@@ -300,26 +344,32 @@ def _allowed_ids(index: dict, doc_filter: str | None) -> np.ndarray | None:
     return np.array(sorted(ids), dtype=np.int64)
 
 
-def _filters_df(index: dict, doc_filter: str | None) -> DataFrame | None:
+def _filters_df(
+    index: dict, doc_filter: str | dict[str, str] | None
+) -> DataFrame | None:
     """Document-level filters as per-salt rows (doc_id, kind, salt), shipped
     to the scoring kernels by cogrouping on salt — never through the driver.
 
     kind 't' = tombstoned (excluded); 'a' = admitted by doc_filter (ES
-    filter-context, poc/src/api/routes/search.py:87-103).  Every doc's
-    postings live in exactly salt = pmod(doc_id, P) (document-partitioned
-    layout), so shuffling the filter ids by that same salt co-locates them
-    with the posting blocks they govern.  At 10^12 scale this is a narrow
-    shuffle of the filtered id column (distributed), replacing the r1
-    driver-side collect of corpus-sized id sets."""
+    filter-context, poc/src/api/routes/search.py:87-103).  A batch passes
+    {kind: predicate} and gets one labelled admitted-id set per distinct
+    predicate.  Every doc's postings live in exactly salt = pmod(doc_id,
+    P) (document-partitioned layout), so shuffling the filter ids by that
+    same salt co-locates them with the posting blocks they govern.  At
+    10^12 scale this is a narrow shuffle of the filtered id column
+    (distributed), replacing the r1 driver-side collect of corpus-sized
+    id sets."""
+    if isinstance(doc_filter, str):
+        doc_filter = {"a": doc_filter}
     parts = []
     tomb = _tomb_df(index)
     if tomb is not None:
         parts.append(tomb.select("doc_id", F.lit("t").alias("kind")))
-    if doc_filter is not None:
+    for kind, pred in (doc_filter or {}).items():
         parts.append(
             index["doc_map"]
-            .filter(doc_filter)
-            .select("doc_id", F.lit("a").alias("kind"))
+            .filter(pred)
+            .select("doc_id", F.lit(kind).alias("kind"))
         )
     if not parts:
         return None
@@ -331,32 +381,34 @@ def _filters_df(index: dict, doc_filter: str | None) -> DataFrame | None:
     )
 
 
-def _split_filters(
-    filt: pd.DataFrame, has_allow: bool
-) -> tuple[np.ndarray | None, np.ndarray | None]:
+def _split_filters(filt: pd.DataFrame, has_allow) -> tuple:
     """Cogrouped filter rows -> (tombstones, allowed) sorted id arrays.
     `has_allow` distinguishes "no doc_filter requested" (allowed=None,
     everything scored) from "filter admits nothing in this salt"
-    (allowed=empty, nothing scored)."""
-    tomb = np.sort(filt.loc[filt["kind"] == "t", "doc_id"].to_numpy(np.int64))
-    allowed = None
-    if has_allow:
-        allowed = np.sort(
-            filt.loc[filt["kind"] == "a", "doc_id"].to_numpy(np.int64)
-        )
+    (allowed=empty, nothing scored); a tuple of kinds (a batch) gets
+    allowed as {kind: ids}."""
+
+    def ids_of(kind: str) -> np.ndarray:
+        return np.sort(filt.loc[filt["kind"] == kind, "doc_id"].to_numpy(np.int64))
+
+    tomb = ids_of("t")
+    if isinstance(has_allow, tuple):
+        allowed = {kind: ids_of(kind) for kind in has_allow}
+    else:
+        allowed = ids_of("a") if has_allow else None
     return (tomb if tomb.size else None), allowed
 
 
 def _salt_scored(
     post: DataFrame,
     filt: DataFrame | None,
-    has_allow: bool,
+    has_allow,
     kernel,
     out_schema: str,
 ) -> DataFrame:
     """Run a per-salt scoring kernel, cogrouping in the per-salt filter ids
     when any document-level filter exists.  kernel(post_pdf, tomb, allowed)
-    -> pdf matching out_schema."""
+    -> pdf matching out_schema (allowed as _split_filters gives it)."""
     if filt is None:
         return post.groupBy("salt").applyInPandas(
             lambda pdf: kernel(pdf, None, None), out_schema
@@ -371,6 +423,77 @@ def _salt_scored(
         .cogroup(filt.groupBy("salt"))
         .applyInPandas(cokernel, out_schema)
     )
+
+
+def _query_idfs(
+    index: dict,
+    spec: QuerySpec,
+    stats_override: tuple[dict, float] | None = None,
+    source=None,
+) -> tuple[dict, float] | None:
+    """idfs and avgdl for a normalised query — from `source(index, terms)`
+    (default _collect_idfs) or from `stats_override=(idfs, avgdl)`, the
+    EXTERNAL statistics of the dfs_query_then_fetch seam, restricted to
+    the query's terms.  None when too few of the terms exist for any doc
+    to reach spec.require_all."""
+    if stats_override is not None:
+        ext, avgdl = stats_override
+        idfs = {t: float(ext[t]) for t in spec.terms if ext.get(t) is not None}
+    else:
+        idfs, avgdl = (source or _collect_idfs)(index, spec.terms)
+    if not idfs or spec.require_all > len(idfs):
+        return None
+    return idfs, float(avgdl)
+
+
+_URL_FILL_TYPES = {
+    "query_id": "int", "doc_id": "long", "url": "string", "score": "double",
+}
+
+
+def _with_urls(index: dict, topk, ordered: bool = True) -> DataFrame:
+    """The url fill of every scored top-k: `topk` (k-row bounded, a Spark
+    or a driver-side pandas frame) gains `url` after `doc_id`, ordered by
+    (query_id,) score desc, doc_id asc.  A pandas top-k on a written index
+    reads its urls driver-side with pyarrow and returns a local relation
+    — no join job over the corpus-sized doc_map (inner merge == inner
+    join, same parquet rows).  Otherwise the k-row side is broadcast, so
+    doc_map is scanned map-side and never shuffled per query."""
+    cols = [
+        c for col in topk.columns
+        for c in ((col, "url") if col == "doc_id" else (col,))
+    ]
+    lead = ["query_id"] if "query_id" in topk.columns else []
+    spark = index["doc_map"].sparkSession
+    if isinstance(topk, pd.DataFrame):
+        urls = _arrow_read(
+            index, "doc_map", ["doc_id", "url"],
+            {"doc_id": sorted({int(d) for d in topk["doc_id"]})},
+        )
+        if urls is None:
+            topk = spark.createDataFrame(
+                topk,
+                ", ".join(f"{c} {_URL_FILL_TYPES[c]}" for c in topk.columns),
+            )
+        else:
+            out = topk.merge(urls.to_pandas(), on="doc_id", how="inner")
+            out = out.sort_values(
+                lead + ["score", "doc_id"],
+                ascending=[True] * len(lead) + [False, True],
+                kind="mergesort",
+            )
+            return spark.createDataFrame(
+                out[cols], ", ".join(f"{c} {_URL_FILL_TYPES[c]}" for c in cols)
+            )
+    out = (
+        index["doc_map"]
+        .select("doc_id", "url")
+        .join(F.broadcast(topk), "doc_id", "inner")
+        .select(*cols)
+    )
+    if not ordered:
+        return out
+    return out.orderBy(*lead, F.desc("score"), F.asc("doc_id"))
 
 
 def wand_topk(
@@ -421,34 +544,18 @@ def wand_topk(
     """
     if algo not in ("maxscore", "bmw"):
         raise ValueError(f"unknown algo {algo!r}")
-    if algo == "bmw" and (
-        conjunctive or min_should_match or exclude_terms or after
-    ):
+    spec = query_spec(terms, conjunctive, min_should_match, exclude_terms)
+    if algo == "bmw" and (spec.require_all or spec.exclude or after):
         raise ValueError(
             "algo='bmw' implements the plain disjunctive top-k only"
         )
-    if conjunctive and min_should_match:
-        raise ValueError(
-            "conjunctive IS min_should_match=len(terms); pass only one"
+    resolved = _query_idfs(index, spec, stats_override)
+    if resolved is None:
+        return index["doc_map"].sparkSession.createDataFrame(
+            [], "doc_id long, url string, score double"
         )
-    exclude = sorted(set(exclude_terms or []))
-    spark = index["doc_map"].sparkSession
-    if stats_override is not None:
-        ext_idfs, avgdl = stats_override
-        # restrict to the query's terms, drop zero-hit entries (None)
-        idfs = {
-            t: float(v)
-            for t, v in ext_idfs.items()
-            if t in set(terms) and v is not None
-        }
-    else:
-        idfs, avgdl = _collect_idfs(index, terms)
-    empty = spark.createDataFrame([], "doc_id long, url string, score double")
-    n_terms = len(set(terms))
-    require_all = n_terms if conjunctive else int(min_should_match)
-    if not idfs or require_all > len(idfs):
-        return empty  # too few terms exist for any doc to reach the bar
-
+    idfs, avgdl = resolved
+    exclude = spec.exclude
     post = _postings_for_terms(index, sorted(set(idfs) | set(exclude)))
     filt = _filters_df(index, doc_filter)
 
@@ -457,7 +564,7 @@ def wand_topk(
 
         def kernel(pdf, tomb, allowed):
             return bmw_salt_kernel(
-                pdf, idfs, float(avgdl), k, tombstones=tomb, allowed=allowed
+                pdf, idfs, avgdl, k, tombstones=tomb, allowed=allowed
             )
     else:
 
@@ -465,23 +572,28 @@ def wand_topk(
             if exclude:
                 pdf, tomb = _apply_exclusions(pdf, exclude, tomb)
             return _score_salt_group(
-                pdf, idfs, float(avgdl), k, tombstones=tomb, allowed=allowed,
-                require_all=require_all, after=after,
+                pdf, idfs, avgdl, k, tombstones=tomb, allowed=allowed,
+                require_all=spec.require_all, after=after,
             )
 
     local = _salt_scored(
         post, filt, doc_filter is not None, kernel, "doc_id long, score double"
     )
-    topk = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    # url lookup: broadcast the k-row top-k side so doc_map is scanned
-    # map-side (never shuffled per query — doc_map is corpus-sized).
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(topk), "doc_id", "inner")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    return _with_urls(
+        index, local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     )
+
+
+def _term_buckets(terms) -> list[int]:
+    """term_bucket partition values of `terms`: pmod(xxhash64(term),
+    N_TERM_BUCKETS) computed driver-side (bit-identical pure-Python
+    XXH64), so pruning a cold query's scan costs no Spark job.  Every
+    index is written with N_TERM_BUCKETS, so the Spark and the pyarrow
+    routes prune with the same constant the layout used."""
+    from ..functions.xxhash import term_bucket
+    from ..index.build import N_TERM_BUCKETS
+
+    return sorted({term_bucket(t, N_TERM_BUCKETS) for t in terms})
 
 
 def _bucketed(index: dict, df: DataFrame, terms: list[str]) -> DataFrame:
@@ -491,13 +603,90 @@ def _bucketed(index: dict, df: DataFrame, terms: list[str]) -> DataFrame:
     dirs."""
     if "term_bucket" not in df.columns:
         return df
-    from ..functions.xxhash import term_bucket
-    from ..index.build import N_TERM_BUCKETS
+    return df.filter(F.col("term_bucket").isin(_term_buckets(terms)))
 
-    # pmod(xxhash64(term), N) computed driver-side (bit-identical pure-
-    # Python XXH64) — no Spark job just to hash a cold query's terms
-    buckets = sorted({term_bucket(t, N_TERM_BUCKETS) for t in terms})
-    return df.filter(F.col("term_bucket").isin(buckets))
+
+#: written tables the driver may read itself: the handle's directory key,
+#: its memoised dataset key and the directory's partitioning
+_ARROW_TABLES = {
+    "postings": ("_postings_dir", "_post_ds", "hive"),
+    "term_dict": ("_term_dict_dir", "_td_ds", "hive"),
+    "stats": ("_stats_dir", "_stats_ds", None),
+    "doc_map": ("_doc_map_dir", "_dm_ds", None),
+}
+
+#: size guard for the driver-local url fill: the doc_map table is
+#: unsorted, so the k-row isin filter still reads the whole (doc_id, url)
+#: projection — fine for a serving node's local index, unacceptable for a
+#: cluster-scale doc_map, which keeps the broadcast-join route.
+_DOC_MAP_LOCAL_MAX_BYTES = 2 << 30
+
+
+def _arrow_fallback(index: dict, table: str, err: Exception) -> None:
+    """Warn once per handle and cause that a driver-side read fell back to
+    the Spark route (same rows, slower) — a corrupt file or a pyarrow
+    regression must not hide as a slower query."""
+    seen = index.setdefault("_arrow_warned", set())
+    cause = (table, type(err).__name__)
+    if cause not in seen:
+        seen.add(cause)
+        warnings.warn(
+            f"driver-side pyarrow read of the {table} table failed "
+            f"({type(err).__name__}: {err}); using the Spark route",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+
+
+def _arrow_read(index: dict, table: str, columns: list[str], where=None):
+    """Driver-side pyarrow read of a written index table -> pyarrow Table,
+    the query-node serving pattern query/docstore.py and fuzzy.py use.
+    `where` maps column -> admitted values (ANDed `isin` filters).  The
+    Spark route reads the same parquet files with the same partition
+    pruning and filters, so the rows are the same; only the fetch engine
+    changes (a |q|-row lookup no longer costs a Spark job).  The opened
+    dataset (file listing + parquet footers) is memoised on the handle.
+
+    None -> the caller takes the Spark route: silently when no local
+    directory backs the handle (in-memory build, multi-segment view,
+    remote URI, swapped table, doc_map above its size guard), with a
+    one-time warning (_arrow_fallback) when the read itself fails."""
+    dir_key, memo_key, partitioning = _ARROW_TABLES[table]
+    path = index.get(dir_key)
+    if not path:
+        return None
+    try:
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+    except ImportError as e:
+        _arrow_fallback(index, table, e)
+        return None
+    try:
+        src = index.get(memo_key)
+        if src is None:
+            if not os.path.isdir(path):
+                return None
+            if table == "doc_map" and sum(
+                os.path.getsize(os.path.join(r, f))
+                for r, _, fs in os.walk(path)
+                for f in fs
+            ) > _DOC_MAP_LOCAL_MAX_BYTES:
+                index[dir_key] = None  # don't re-stat every call
+                return None
+            src = ds.dataset(path, format="parquet", partitioning=partitioning)
+            index[memo_key] = src
+        filt = None
+        for col, vals in (where or {}).items():
+            e = ds.field(col).isin(vals)
+            filt = e if filt is None else filt & e
+        return src.to_table(columns=columns, filter=filt)
+    except (OSError, pa.ArrowInvalid, KeyError) as e:
+        _arrow_fallback(index, table, e)
+        return None
+
+
+def _term_where(terms: list[str]) -> dict:
+    return {"term_bucket": _term_buckets(terms), "term": list(terms)}
 
 
 def _index_stats(index: dict) -> tuple[int, float]:
@@ -506,20 +695,10 @@ def _index_stats(index: dict) -> tuple[int, float]:
     stats table is read driver-side (pyarrow) instead of through a Spark
     action — same parquet values either way."""
     if "_stats" not in index:
-        row = None
-        sdir = index.get("_stats_dir")
-        if sdir and os.path.isdir(sdir):
-            try:
-                import pyarrow.dataset as ds
-
-                t = ds.dataset(sdir, format="parquet").to_table(
-                    columns=["n_docs", "avgdl"]
-                )
-                if t.num_rows:
-                    row = (t["n_docs"][0].as_py(), t["avgdl"][0].as_py())
-            except Exception:
-                row = None
-        if row is None:
+        t = _arrow_read(index, "stats", ["n_docs", "avgdl"])
+        if t is not None and t.num_rows:
+            row = (t["n_docs"][0].as_py(), t["avgdl"][0].as_py())
+        else:
             row = index["stats"].select("n_docs", "avgdl").first()
         n, avgdl = row
         # empty corpus: avgdl is NULL; any positive value works (no postings)
@@ -527,178 +706,83 @@ def _index_stats(index: dict) -> tuple[int, float]:
     return index["_stats"]
 
 
-def _pyarrow_term_dict(index: dict, terms: list[str]):
-    """Bucket-pruned driver-local (term, df) lookup from the written
-    term_dict table — the _pyarrow_blocks seam applied to the vocabulary
-    (a |q|-row metadata fetch should not cost a Spark action).  Returns
-    None when no readable directory backs the handle; the caller falls
-    back to the Spark scan.  Identical values: same files, same bucket
-    pruning, same `term IN (...)` filter."""
-    tdir = index.get("_term_dict_dir")
-    if not tdir:
-        return None
-    try:
-        import pyarrow.dataset as ds
-
-        src = index.get("_td_ds")
-        if src is None:
-            if not os.path.isdir(tdir):
-                return None
-            src = ds.dataset(tdir, format="parquet", partitioning="hive")
-            index["_td_ds"] = src
-        from ..functions.xxhash import term_bucket
-        from ..index.build import N_TERM_BUCKETS
-
-        buckets = sorted({term_bucket(t, N_TERM_BUCKETS) for t in terms})
-        filt = ds.field("term_bucket").isin(buckets) & ds.field("term").isin(
-            terms
-        )
-        return src.to_table(columns=["term", "df"], filter=filt).to_pandas()
-    except Exception:
-        return None
-
-
-def _local_idfs(index: dict, terms: list[str]) -> tuple[dict, float]:
-    """idf per query term for the query-node-local paths WITHOUT a
-    term_dict scan: df is derivable from the fetched posting blocks —
-    sum(block n_docs) over every salt (and, for multi-segment views,
-    every segment) equals term_dict's df, because the blocks partition
-    exactly the (term, doc) pairs term_dict counts and neither side is
-    tombstone-adjusted (as_index sums per-segment df the same way).  One
-    pruned postings fetch therefore warms BOTH the block cache and the
-    idf cache: a cold query costs one Spark job, not two (guide §1 —
-    measured, the second job was ~half of cold-query latency).  Values
-    land in the same _idf_cache the distributed paths use, and are
-    bit-equal to the term_dict route (same integer df, same formula)."""
-    n, avgdl = _index_stats(index)
+def _fill_idfs(index: dict, terms: list[str], dfs_of) -> tuple[dict, float]:
+    """The one idf cache fill: idf per term memoised on the handle (None =
+    zero-hit term), missing dfs fetched by `dfs_of(index, missing) ->
+    {term: df}`.  Every route yields the same integer df, so the cached
+    idfs are bit-equal whichever route filled them."""
     cache = index.setdefault("_idf_cache", {})
     missing = sorted({t for t in terms if t not in cache})
     if missing:
-        _local_blocks(index, missing, [])
-        blocks = index["_local_post_cache"]
+        dfs = dfs_of(index, missing)
+        n, _ = _index_stats(index)
         for t in missing:
-            g = blocks.get(t)
-            if g is None:
-                cache[t] = None
-            else:
-                df = int(g["n_docs"].sum())
-                cache[t] = float(
-                    np.log(1.0 + (n - df + 0.5) / (df + 0.5))
-                )
-    idfs = {t: cache[t] for t in terms if cache.get(t) is not None}
-    return idfs, avgdl
+            df = dfs.get(t)
+            cache[t] = None if df is None else float(bm25_idf(n, int(df)))
+    n, avgdl = _index_stats(index)
+    return {t: cache[t] for t in terms if cache.get(t) is not None}, avgdl
 
 
-def _collect_idfs(index: dict, terms: list[str]) -> tuple[dict, float]:
-    """Per-index memoized global stats + per-term idf lookups (bucket-pruned
-    when term_dict is the partitioned on-disk layout).
-
-    On a fresh index handle the (n_docs, avgdl) row rides along the
-    term_dict lookup as a crossJoin with the 1-row stats table — one
-    Spark action instead of two for a cold index (guide §1: per-action
+def _term_dfs(index: dict, terms: list[str]) -> dict[str, int]:
+    """(term -> df) from the bucket-pruned term_dict: a driver-local
+    pyarrow read on a written index, else one Spark action.  On a fresh
+    handle the 1-row stats ride the Spark lookup as a crossJoin — one
+    action instead of two for a cold index (guide §1: per-action
     overhead dominates these driver-side metadata fetches)."""
-    cache = index.setdefault("_idf_cache", {})
-    missing = [t for t in terms if t not in cache]
-    if missing:
-        # written-index fast path: (term, df) and the 1-row stats are
-        # driver-local parquet reads (no Spark action at all on a cold
-        # handle) — same files and filters as the Spark route below, so
-        # the cached idfs are bit-equal either way
-        rows_pd = _pyarrow_term_dict(index, missing)
-        if rows_pd is not None:
-            n, _ = _index_stats(index)
-            for term, df in zip(rows_pd["term"], rows_pd["df"]):
-                cache[term] = float(
-                    np.log(1.0 + (n - int(df) + 0.5) / (int(df) + 0.5))
-                )
-            for t in missing:
-                cache.setdefault(t, None)  # zero-hit terms
-            missing = []
-    if missing and "_stats" not in index:
-        rows = (
-            _bucketed(index, index["term_dict"], missing)
-            .filter(F.col("term").isin(missing))
-            .select("term", "df")
-            .crossJoin(index["stats"].select("n_docs", "avgdl"))
-            .collect()
-        )
+    t = _arrow_read(index, "term_dict", ["term", "df"], _term_where(terms))
+    if t is not None:
+        return {
+            term: int(df)
+            for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist())
+        }
+    q = (
+        _bucketed(index, index["term_dict"], terms)
+        .filter(F.col("term").isin(terms))
+        .select("term", "df")
+    )
+    if "_stats" in index:
+        rows = q.collect()
+    else:
+        rows = q.crossJoin(index["stats"].select("n_docs", "avgdl")).collect()
         if rows:
             n0, a0 = rows[0]["n_docs"], rows[0]["avgdl"]
             index["_stats"] = (int(n0 or 0), float(a0) if a0 else 1.0)
-            n, _ = index["_stats"]
-            for r in rows:
-                cache[r["term"]] = float(
-                    np.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5))
-                )
-            for t in missing:
-                cache.setdefault(t, None)  # zero-hit terms
-            missing = []
-        # rows empty => none of the terms exist; fall through to the
-        # memoized stats fetch so avgdl/n are still resolved once
-    n, avgdl = _index_stats(index)
-    if missing:
-        for r in (
-            _bucketed(index, index["term_dict"], missing)
-            .filter(F.col("term").isin(missing))
-            .select("term", "df")
-            .collect()
-        ):
-            cache[r["term"]] = float(
-                np.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5))
-            )
-        for t in missing:
-            cache.setdefault(t, None)  # zero-hit terms
-    idfs = {t: cache[t] for t in terms if cache.get(t) is not None}
-    return idfs, avgdl
+    return {r["term"]: int(r["df"]) for r in rows}
+
+
+def _block_dfs(index: dict, terms: list[str]) -> dict[str, int]:
+    """(term -> df) WITHOUT a term_dict scan: sum(block n_docs) over every
+    salt (and, for multi-segment views, every segment) equals term_dict's
+    df, because the blocks partition exactly the (term, doc) pairs
+    term_dict counts and neither side is tombstone-adjusted (as_index
+    sums per-segment df the same way).  One pruned postings fetch
+    therefore warms BOTH the block cache and the idf cache: a cold local
+    query costs one fetch, not two (guide §1 — measured, the second job
+    was ~half of cold-query latency)."""
+    _local_blocks(index, terms, [])
+    blocks = index["_local_post_cache"]
+    return {
+        t: int(blocks[t]["n_docs"].sum())
+        for t in terms
+        if blocks.get(t) is not None
+    }
+
+
+def _collect_idfs(index: dict, terms: list[str]) -> tuple[dict, float]:
+    """Per-index memoized global stats + per-term idfs from term_dict."""
+    return _fill_idfs(index, terms, _term_dfs)
+
+
+def _local_idfs(index: dict, terms: list[str]) -> tuple[dict, float]:
+    """idfs for the query-node-local paths, derived from the posting
+    blocks they fetch anyway (_block_dfs)."""
+    return _fill_idfs(index, terms, _block_dfs)
 
 
 #: upper bound on per-salt top-k rows merged driver-side by
 #: wand_topk_batch (n_salts x live queries x k); above it the reduce
 #: stays a distributed window — a scale guard, not a tuning knob.
 _DRIVER_MERGE_MAX_ROWS = 262_144
-
-#: size guard for the driver-local url fill (_pyarrow_doc_urls): the
-#: doc_map table is unsorted, so the k-row isin filter still reads the
-#: whole (doc_id, url) projection — fine for a serving node's local
-#: index, unacceptable for a cluster-scale doc_map, which keeps the
-#: broadcast-join route.
-_DOC_MAP_LOCAL_MAX_BYTES = 2 << 30
-
-
-def _pyarrow_doc_urls(index: dict, doc_ids) -> pd.DataFrame | None:
-    """(doc_id, url) for the requested ids, read driver-side from the
-    written doc_map — replaces the per-batch broadcast-join job against
-    the corpus-sized doc_map with a ~10 ms local read when the reduce is
-    already driver-side (wand_topk_batch's k-row merge).  Same parquet
-    rows as the join route, inner-join semantics preserved by the
-    caller's merge.  None -> caller keeps the Spark join (no readable
-    dir, table swapped, or doc_map above the size guard)."""
-    dmdir = index.get("_doc_map_dir")
-    if not dmdir:
-        return None
-    try:
-        import pyarrow.dataset as ds
-
-        src = index.get("_dm_ds")
-        if src is None:
-            if not os.path.isdir(dmdir):
-                return None
-            size = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(dmdir)
-                for f in fs
-            )
-            if size > _DOC_MAP_LOCAL_MAX_BYTES:
-                index["_doc_map_dir"] = None  # don't re-stat every call
-                return None
-            src = ds.dataset(dmdir, format="parquet")
-            index["_dm_ds"] = src
-        ids = sorted({int(d) for d in doc_ids})
-        return src.to_table(
-            columns=["doc_id", "url"], filter=ds.field("doc_id").isin(ids)
-        ).to_pandas()
-    except Exception:
-        return None
 
 
 def wand_topk_batch(
@@ -729,89 +813,57 @@ def wand_topk_batch(
     even when several queries exclude them.  `after` (per-query-id
     (score, doc_id) cursor dict) pages each query independently —
     wand_topk's search_after contract, applied per query at reduce time.
+    Every query is normalised like wand_topk's (query_spec).
 
     Returns (query_id, doc_id, url, score), top-k per query, ordered.
     """
     spark = index["doc_map"].sparkSession
-    # normalize filters -> dedup'd predicate table + query->fid map
+    # per-query predicates -> one admitted-id kind per DISTINCT predicate
     if doc_filter is None:
-        preds: dict[int, str] = {}
-        fid_of: dict[int, int] = {}
+        pred_of: dict[int, str] = {}
     elif isinstance(doc_filter, str):
-        preds = {0: doc_filter}
-        fid_of = {qid: 0 for qid in queries}
+        pred_of = {qid: doc_filter for qid in queries}
     else:
-        uniq: dict[str, int] = {}
-        fid_of = {}
-        for qid, p in doc_filter.items():
-            if p is None:
-                continue
-            uniq.setdefault(p, len(uniq))
-            fid_of[qid] = uniq[p]
-        preds = {fid: p for p, fid in uniq.items()}
-    if min_should_match is None:
-        msm: dict[int, int] = {}
-    elif isinstance(min_should_match, int):
-        msm = {qid: int(min_should_match) for qid in queries}
+        pred_of = {qid: p for qid, p in doc_filter.items() if p is not None}
+    kinds: dict[str, str] = {}
+    for p in pred_of.values():
+        kinds.setdefault(p, f"a{len(kinds)}")
+    if isinstance(min_should_match, int):
+        msm = {qid: min_should_match for qid in queries}
     else:
-        msm = {qid: int(m) for qid, m in min_should_match.items()}
-    excl = {
-        qid: sorted(set(ts)) for qid, ts in (exclude_terms or {}).items()
-    }
-    cursors = dict(after or {})
+        msm = dict(min_should_match or {})
+    excl = exclude_terms or {}
+    cursors = after or {}
     all_terms = sorted({t for ts in queries.values() for t in ts})
     idfs, avgdl = _collect_idfs(index, all_terms)
-    live = {qid: [t for t in ts if t in idfs] for qid, ts in queries.items()}
-    # a query whose msm bar exceeds its live terms can never match
-    live = {
-        qid: ts for qid, ts in live.items()
-        if ts and msm.get(qid, 0) <= len(set(ts))
-    }
+
+    def batch_idfs(_index, terms):
+        return {t: idfs[t] for t in terms if t in idfs}, avgdl
+
+    live: dict[int, tuple[QuerySpec, list[str]]] = {}
+    for qid, ts in queries.items():
+        spec = query_spec(
+            ts, min_should_match=msm.get(qid, 0), exclude_terms=excl.get(qid)
+        )
+        resolved = _query_idfs(index, spec, source=batch_idfs)
+        if resolved is not None:
+            live[qid] = (spec, sorted(resolved[0]))
     empty = spark.createDataFrame(
         [], "query_id int, doc_id long, url string, score double"
     )
     if not live:
         return empty
 
-    scan_excl = sorted({t for qid in live for t in excl.get(qid, [])})
     post = _postings_for_terms(
         index,
-        sorted({t for ts in live.values() for t in ts} | set(scan_excl)),
+        sorted(
+            {t for _, ts in live.values() for t in ts}
+            | {t for spec, _ in live.values() for t in spec.exclude}
+        ),
     )
-    # filter rows: kind 't' = tombstone, 'a<fid>' = admitted by predicate
-    # fid — one labeled id set per DISTINCT predicate
-    filt_parts = []
-    tomb_df = _tomb_df(index)
-    if tomb_df is not None:
-        filt_parts.append(tomb_df.select("doc_id", F.lit("t").alias("kind")))
-    for fid, p in preds.items():
-        filt_parts.append(
-            index["doc_map"].filter(p)
-            .select("doc_id", F.lit(f"a{fid}").alias("kind"))
-        )
-    filt = None
-    if filt_parts:
-        filt = filt_parts[0]
-        for fp in filt_parts[1:]:
-            filt = filt.unionByName(fp)
-        filt = filt.withColumn(
-            "salt", F.pmod(F.col("doc_id"), F.lit(_n_parts(index))).cast("int")
-        )
+    filt = _filters_df(index, {kd: p for p, kd in kinds.items()})
 
-    def kernel(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
-        if side is not None:
-            tomb = np.sort(
-                side.loc[side["kind"] == "t", "doc_id"].to_numpy(np.int64)
-            )
-            tomb = tomb if tomb.size else None
-            allowed_by_fid = {
-                int(kd[1:]): np.sort(g["doc_id"].to_numpy(np.int64))
-                for kd, g in side.groupby("kind", sort=False)
-                if kd != "t"
-            }
-        else:
-            tomb = None
-            allowed_by_fid = {}
+    def kernel(pdf: pd.DataFrame, tomb, allowed) -> pd.DataFrame:
         # Queries in a batch share Zipf-head terms ("the", "data", ...);
         # decode each term's blocks ONCE per salt and cache the per-doc
         # BM25 contributions — each query then reduces cached arrays.
@@ -819,15 +871,13 @@ def wand_topk_batch(
         # ever drops provably-sub-top-k docs, and here decode cost is
         # already amortized across the batch.
         by_term = {t: g for t, g in pdf.groupby("term", sort=False)}
-        cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+        cache: dict[str, tuple[np.ndarray, np.ndarray] | None] = {}
         excl_cache: dict[str, np.ndarray] = {}
 
         def excl_member_ids(t: str) -> np.ndarray:
             # must_not needs MEMBERSHIP only: decode doc_gaps alone (tf/dl
             # stay compressed) and never touch idfs — an excluded term is
             # usually not a query term, so it has no idf entry at all.
-            # Tombstone/allowed masks are irrelevant here: removing an
-            # already-removed id is a no-op.
             if t not in excl_cache:
                 g = by_term.get(t)
                 excl_cache[t] = (
@@ -838,91 +888,52 @@ def wand_topk_batch(
             return excl_cache[t]
 
         def term_contrib(t: str) -> tuple[np.ndarray, np.ndarray] | None:
-            if t in cache:
-                return cache[t]
-            g = by_term.get(t)
-            if g is None:
-                return None
-            g = g.sort_values("block_id")
-            ids, tfs, dls = decode_many(
-                [bytes(x) for x in g["doc_gaps"]],
-                [bytes(x) for x in g["tf_bytes"]],
-                [bytes(x) for x in g["dl_bytes"]],
-                g["n_docs"].to_numpy(),
-            )
-            ids = ids.astype(np.int64)
-            if tomb is not None and tomb.size:
-                live_m = ~np.isin(ids, tomb)
-                ids = ids[live_m]
-                tfs, dls = tfs[live_m], dls[live_m]
-            # per-query doc_filters are applied at reduce time, NOT here —
-            # the decode cache must stay filter-agnostic to be shared
-            w = _bm25_w(
-                tfs.astype(np.float64), dls.astype(np.float64), avgdl, idfs[t]
-            )
-            cache[t] = (ids, w)
+            if t not in cache:
+                g = by_term.get(t)
+                if g is None:
+                    cache[t] = None
+                else:
+                    ids, tfs, dls = _decode(g.sort_values("block_id"))
+                    live_m = _live_mask(ids, tomb, None)
+                    if live_m is not None:
+                        ids, tfs, dls = ids[live_m], tfs[live_m], dls[live_m]
+                    # per-query doc_filters apply at selection, NOT here —
+                    # the decode cache must stay filter-agnostic to be shared
+                    cache[t] = (ids, bm25_weight(tfs, dls, avgdl, idfs[t]))
             return cache[t]
 
         outs = []
-        for qid, ts in live.items():
+        for qid, (spec, ts) in live.items():
             arrs = [a for a in (term_contrib(t) for t in ts) if a is not None]
             if not arrs or not any(a[0].size for a in arrs):
                 continue
             all_ids = np.concatenate([a[0] for a in arrs])
             all_w = np.concatenate([a[1] for a in arrs])
-            fid = fid_of.get(qid)
-            if fid is not None:
-                allowed = allowed_by_fid.get(
-                    fid, np.array([], dtype=np.int64)
-                )
-                if allowed.size == 0:
-                    continue  # this query's filter admits nothing here
-                pos = np.searchsorted(allowed, all_ids)
-                pos[pos >= allowed.size] = 0
-                ok = allowed[pos] == all_ids
-                if not ok.any():
-                    continue
-                all_ids, all_w = all_ids[ok], all_w[ok]
             order = np.argsort(all_ids, kind="stable")
             all_ids, all_w = all_ids[order], all_w[order]
             uniq, starts = np.unique(all_ids, return_index=True)
-            sums = np.round(np.add.reduceat(all_w, starts), SCORE_DECIMALS)
-            if msm.get(qid, 0) > 1:
-                # hit count per doc = run length of each unique id (every
-                # term contributes one posting per doc)
-                hits = np.diff(np.append(starts, all_ids.size))
-                keep = hits >= msm[qid]
-                uniq, sums = uniq[keep], sums[keep]
-            ex = excl.get(qid)
-            if ex:
-                ex_arrs = [
-                    a for a in (excl_member_ids(t) for t in ex) if a.size
-                ]
-                if ex_arrs:
-                    ex_ids = np.unique(np.concatenate(ex_arrs))
-                    keep = ~np.isin(uniq, ex_ids)
-                    uniq, sums = uniq[keep], sums[keep]
-            cur = cursors.get(qid)
-            if cur is not None:
-                # search_after: only docs strictly past this query's
-                # cursor (sums are already rounded, matching the global
-                # order — same contract as _score_salt_group(after=))
-                a_s, a_d = float(cur[0]), int(cur[1])
-                keep = (sums < a_s) | ((sums == a_s) & (uniq > a_d))
-                uniq, sums = uniq[keep], sums[keep]
-            if uniq.size == 0:
-                continue
-            top = min(k, uniq.size)
-            sel = np.lexsort((uniq, -sums))[:top]
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.full(top, qid, dtype=np.int32),
-                        "doc_id": uniq[sel],
-                        "score": sums[sel],
-                    }
-                )
+            # hit count per doc = run length of each unique id (every
+            # distinct term contributes one posting per doc)
+            hits = np.diff(np.append(starts, all_ids.size))
+            ex = [a for a in map(excl_member_ids, spec.exclude) if a.size]
+            kind = kinds.get(pred_of.get(qid))
+            ids, scores = _select(
+                uniq, np.add.reduceat(all_w, starts), k,
+                hits=hits, require_all=spec.require_all,
+                tombstones=np.unique(np.concatenate(ex)) if ex else None,
+                allowed=allowed[kind] if kind else None,
+                after=cursors.get(qid),
             )
+            if ids.size:
+                outs.append(
+                    pd.DataFrame(
+                        {
+                            "query_id": np.full(ids.size, qid, dtype=np.int32),
+                            "doc_id": ids,
+                            "score": scores,
+                        }
+                    )
+                )
         if not outs:
             return pd.DataFrame(
                 {
@@ -933,25 +944,19 @@ def wand_topk_batch(
             )
         return pd.concat(outs, ignore_index=True)
 
-    out_schema = "query_id int, doc_id long, score double"
-    if filt is None:
-        local = post.groupBy("salt").applyInPandas(
-            lambda p: kernel(p, None), out_schema
-        )
-    else:
-        local = (
-            post.groupBy("salt")
-            .cogroup(filt.groupBy("salt"))
-            .applyInPandas(lambda p, s: kernel(p, s), out_schema)
-        )
+    local = _salt_scored(
+        post, filt, tuple(kinds.values()), kernel,
+        "query_id int, doc_id long, score double",
+    )
     # Reduce: k-way merge of the per-salt top-ks.  `local` is k-row
     # bounded (<= n_salts * k rows per query), so for serving-sized
     # batches the merge is done driver-side in one pass — the query-node
     # reduce, same k-row-collect class as wand_topk_local — which drops
     # the window shuffle + separate broadcast job from the plan (2 fewer
-    # stages per batch).  Above _DRIVER_MERGE_MAX_ROWS (huge fan-out x
-    # thousand-query batches on a big cluster) the distributed window
-    # reduce is kept — identical results either way.
+    # stages per batch), and the url fill reads doc_map driver-side too.
+    # Above _DRIVER_MERGE_MAX_ROWS (huge fan-out x thousand-query batches
+    # on a big cluster) the distributed window reduce is kept — identical
+    # results either way.
     if _n_parts(index) * len(live) * k <= _DRIVER_MERGE_MAX_ROWS:
         rows = local.toPandas()
         if rows.empty:
@@ -961,45 +966,15 @@ def wand_topk_batch(
             ascending=[True, False, True],
             kind="mergesort",
         )
-        top = rows.groupby("query_id", sort=False).head(k)
-        # url fill: the reduce is already driver-side and k-row bounded,
-        # so on a written index the (doc_id, url) lookup is a driver-
-        # local parquet read too — the whole result becomes a LOCAL
-        # relation and the per-batch broadcast-join job over the
-        # corpus-sized doc_map disappears (measured ~0.22 s of the
-        # 1.5 s cold batch).  Same rows: same parquet, inner-merge ==
-        # inner-join, same (query_id, score desc, doc_id) final order.
-        urls = _pyarrow_doc_urls(index, top["doc_id"].unique())
-        if urls is not None:
-            out = top.merge(urls, on="doc_id", how="inner").sort_values(
-                ["query_id", "score", "doc_id"],
-                ascending=[True, False, True],
-                kind="mergesort",
-            )
-            return spark.createDataFrame(
-                out[["query_id", "doc_id", "url", "score"]],
-                "query_id int, doc_id long, url string, score double",
-            )
-        topk = spark.createDataFrame(
-            top, "query_id int, doc_id long, score double"
-        )
-    else:
-        from pyspark.sql import Window
+        return _with_urls(index, rows.groupby("query_id", sort=False).head(k))
+    from pyspark.sql import Window
 
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        topk = (
-            local.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )
-    return (
-        index["doc_map"]
-        .select("doc_id", "url")
-        .join(F.broadcast(topk), "doc_id", "inner")
-        .select("query_id", "doc_id", "url", "score")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    return _with_urls(
+        index,
+        local.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn"),
     )
 
 
@@ -1010,42 +985,13 @@ _LOCAL_FETCH_COLS = [
 
 
 def _pyarrow_blocks(index: dict, terms: list[str]) -> pd.DataFrame | None:
-    """Bucket-pruned driver-local read of the written postings table —
-    the query-node serving pattern query/docstore.py and fuzzy.py already
-    use.  Returns None when the index has no on-disk postings dir this
-    process can read (in-memory build, multi-segment view, remote URI);
-    the caller then falls back to the Spark fetch.
-
-    Identical rows to the Spark route: both read the same parquet files
-    under {_postings_dir}, prune to the query terms' term_bucket
-    partitions with the same driver-side XXH64, and filter term IN (...).
-    Only the fetch ENGINE changes — measured 8 cold queries 1.3 s -> 0.47 s
+    """Bucket-pruned driver-local read of the written postings table
+    (_arrow_read) — measured 8 cold queries 1.3 s -> 0.47 s
     (jobs/probe_wandlocal.py, rank-identity asserted), because a cold
-    term no longer pays a whole Spark job for a few MB of blocks.  The
-    opened dataset (file listing + parquet footers) is memoized on the
-    handle, like docstore's ds_cache."""
-    pdir = index.get("_postings_dir")
-    if not pdir:
-        return None
-    try:
-        import pyarrow.dataset as ds
-
-        src = index.get("_post_ds")
-        if src is None:
-            if not os.path.isdir(pdir):
-                return None
-            src = ds.dataset(pdir, format="parquet", partitioning="hive")
-            index["_post_ds"] = src
-        from ..functions.xxhash import term_bucket
-        from ..index.build import N_TERM_BUCKETS
-
-        buckets = sorted({term_bucket(t, N_TERM_BUCKETS) for t in terms})
-        filt = ds.field("term_bucket").isin(buckets) & ds.field("term").isin(
-            terms
-        )
-        return src.to_table(columns=_LOCAL_FETCH_COLS, filter=filt).to_pandas()
-    except Exception:
-        return None
+    term no longer pays a whole Spark job for a few MB of blocks.  None
+    -> the caller takes the Spark fetch."""
+    t = _arrow_read(index, "postings", _LOCAL_FETCH_COLS, _term_where(terms))
+    return None if t is None else t.to_pandas()
 
 
 def _local_blocks(
@@ -1105,18 +1051,9 @@ def _term_arrays(index: dict, term: str) -> tuple | None:
     if g is None:
         cache[term] = None
         return None
-    ids, tfs, dls = decode_many(
-        [bytes(x) for x in g["doc_gaps"]],
-        [bytes(x) for x in g["tf_bytes"]],
-        [bytes(x) for x in g["dl_bytes"]],
-        g["n_docs"].to_numpy(),
-    )
+    ids, tfs, dls = _decode(g)
     order = np.argsort(ids, kind="stable")
-    entry = (
-        ids[order].astype(np.int64),
-        tfs[order].astype(np.float64),
-        dls[order].astype(np.float64),
-    )
+    entry = (ids[order], tfs[order], dls[order])
     index["_local_decoded_n"] = index.get("_local_decoded_n", 0) + ids.size
     cache[term] = entry
     while index["_local_decoded_n"] > _LOCAL_DECODE_CAP and len(cache) > 1:
@@ -1156,36 +1093,25 @@ def wand_topk_local(
 
     Returns [(doc_id, score), ...] rank-identical to wand_topk.
     """
-    exclude = sorted(set(exclude_terms or []))
+    spec = query_spec(terms, conjunctive, min_should_match, exclude_terms)
     # prefetch every cold term's blocks (query + must_not) in ONE pruned
-    # Spark job; for the default stats path _local_idfs then derives the
+    # fetch; for the default stats path _local_idfs then derives the
     # idfs from the cached blocks, so a cold query pays exactly one
-    # Spark action (the r5 shape was two: term_dict scan + block fetch)
+    # fetch (the r5 shape was two: term_dict scan + block fetch)
     blocks = index.setdefault("_local_post_cache", {})
     prefetch = [
-        t for t in sorted(set(terms) | set(exclude)) if t not in blocks
+        t for t in sorted(set(spec.terms) | set(spec.exclude)) if t not in blocks
     ]
     if prefetch:
         _local_blocks(index, prefetch, [])
-    if stats_override is not None:
-        # external statistics (dfs federation / sparse_vector weights) —
-        # same contract as wand_topk's stats_override
-        ext_idfs, avgdl = stats_override
-        idfs = {
-            t: float(v)
-            for t, v in ext_idfs.items()
-            if t in set(terms) and v is not None
-        }
-    else:
-        idfs, avgdl = _local_idfs(index, terms)
-    n_terms = len(set(terms))
-    require_all = n_terms if conjunctive else int(min_should_match)
-    if not idfs or require_all > len(idfs):
+    resolved = _query_idfs(index, spec, stats_override, _local_idfs)
+    if resolved is None:
         return []
+    idfs, avgdl = resolved
     tomb = _tomb_array(index)
-    if exclude:
+    if spec.exclude:
         ex_parts = [
-            a[0] for a in (_term_arrays(index, t) for t in exclude)
+            a[0] for a in (_term_arrays(index, t) for t in spec.exclude)
             if a is not None
         ]
         if ex_parts:
@@ -1199,7 +1125,7 @@ def wand_topk_local(
             continue
         ids, tfs, dls = arr
         parts_ids.append(ids)
-        parts_w.append(_bm25_w(tfs, dls, avgdl, idfs[t]))
+        parts_w.append(bm25_weight(tfs, dls, avgdl, idfs[t]))
     if not parts_ids:
         return []
     all_ids = np.concatenate(parts_ids)
@@ -1227,33 +1153,8 @@ def wand_topk_local(
         uniq = all_ids[bounds]
         sums = np.add.reduceat(all_w, bounds)
         hits = np.diff(np.append(bounds, all_ids.size))
-    keep = np.ones(uniq.size, dtype=bool)
-    if tomb is not None and tomb.size:
-        keep &= ~np.isin(uniq, tomb)
-    if allowed is not None:
-        if allowed.size:
-            pos = np.searchsorted(allowed, uniq)
-            pos[pos >= allowed.size] = 0
-            keep &= allowed[pos] == uniq
-        else:
-            keep &= False
-    if require_all:
-        keep &= hits >= require_all
-    uniq, sums = uniq[keep], sums[keep]
-    if uniq.size == 0:
-        return []
-    rounded = np.round(sums, SCORE_DECIMALS)
-    if after is not None:
-        a_score, a_doc = float(after[0]), int(after[1])
-        m = (rounded < a_score) | ((rounded == a_score) & (uniq > a_doc))
-        uniq, rounded = uniq[m], rounded[m]
-        if uniq.size == 0:
-            return []
-    if uniq.size > 4096 and k < uniq.size:
-        # prune to the rounded top-k band (ties kept) before the lexsort
-        thresh = np.partition(rounded, rounded.size - k)[rounded.size - k]
-        m = rounded >= thresh
-        uniq, rounded = uniq[m], rounded[m]
-    top = np.lexsort((uniq, -rounded))[: min(k, uniq.size)]
-    res = pd.DataFrame({"doc_id": uniq[top], "score": rounded[top]})
-    return list(res.itertuples(index=False, name=None))
+    ids, scores = _select(
+        uniq, sums, k, hits=hits, require_all=spec.require_all,
+        tombstones=tomb, allowed=allowed, after=after,
+    )
+    return list(zip(ids.tolist(), scores.tolist()))

@@ -64,6 +64,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.files.openCostInBytes", "524288")
         .config("spark.ui.enabled", "false")
+        # No [Stage ...] console bars: a job's stdout tail is its report.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -17,6 +17,8 @@ QUERIES = [
     ["the", "zzzznotaterm"],
     ["dup"],                       # rare
     ["the", "a", "data", "row"],   # multi heavy
+    ["spark", "merge", "spark"],   # a repeated term counts once
+    ["the", "the"],
 ]
 
 
@@ -154,31 +156,56 @@ def test_batch_doc_filter_matches_single_path(spark, sf_dir):
 
 def test_min_should_match_matches_relational(spark, sf_dir, index):
     """ES minimum_should_match: docs must match >= m distinct query terms;
-    rank-identical to the relational scorer with the same bar."""
+    every entry point is rank-identical to the relational scorer with the
+    same bar, and a repeated query term counts (and scores) once."""
+    from telegram2elastic_spark.query.wand import (
+        wand_topk_batch,
+        wand_topk_local,
+    )
+
     corpus = load_corpus(spark, sf_dir)
-    terms = ["vector", "window", "batch"]
-    for m in (1, 2, 3):
-        want = [
+    cases = [
+        (["vector", "window", "batch"], (1, 2, 3)),
+        (["spark", "merge", "spark"], (0, 2)),
+        (["the", "the"], (0, 2)),
+    ]
+    for terms, bars in cases:
+        batch = {}
+        for r in wand_topk_batch(
+            index, {m: terms for m in bars}, k=10,
+            min_should_match={m: m for m in bars},
+        ).collect():
+            batch.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+        for m in bars:
+            want = [
+                (r["doc_id"], r["score"])
+                for r in bm25_topk(
+                    corpus, terms, k=10, min_should_match=m, global_stats=True
+                ).collect()
+            ]
+            got = [
+                (r["doc_id"], r["score"])
+                for r in wand_topk(
+                    index, terms, k=10, min_should_match=m
+                ).collect()
+            ]
+            assert got == want, f"{terms} m={m}"
+            assert wand_topk_local(
+                index, terms, k=10, min_should_match=m
+            ) == want, f"local {terms} m={m}"
+            assert batch.get(m, []) == want, f"batch {terms} m={m}"
+        # m == |distinct terms| is exactly conjunctive mode
+        conj = [
             (r["doc_id"], r["score"])
-            for r in bm25_topk(
-                corpus, terms, k=10, min_should_match=m, global_stats=True
+            for r in wand_topk(index, terms, k=10, conjunctive=True).collect()
+        ]
+        msm = [
+            (r["doc_id"], r["score"])
+            for r in wand_topk(
+                index, terms, k=10, min_should_match=len(set(terms))
             ).collect()
         ]
-        got = [
-            (r["doc_id"], r["score"])
-            for r in wand_topk(index, terms, k=10, min_should_match=m).collect()
-        ]
-        assert got == want, f"m={m}"
-    # m == len(terms) is exactly conjunctive mode
-    conj = [
-        (r["doc_id"], r["score"])
-        for r in wand_topk(index, terms, k=10, conjunctive=True).collect()
-    ]
-    msm = [
-        (r["doc_id"], r["score"])
-        for r in wand_topk(index, terms, k=10, min_should_match=3).collect()
-    ]
-    assert conj == msm
+        assert conj == msm, terms
 
 
 def test_min_should_match_unreachable_bar(index):
@@ -454,3 +481,45 @@ def test_local_pyarrow_fetch_matches_spark_fetch(spark, sf_dir, tmp_path):
     assert wand_topk_local(resized, ["spark", "merge"], k=10) == (
         wand_topk_local(idx_pa, ["spark", "merge"], k=10)
     )
+
+
+def test_arrow_read_failure_warns_and_falls_back(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A driver-side pyarrow read that fails (here: every dataset open
+    raises OSError) falls back to the Spark route with the same rows, and
+    says so once per handle, table and cause — not once per query."""
+    import pyarrow.dataset as pads
+
+    from telegram2elastic_spark.index.build import read_index, write_index
+    from telegram2elastic_spark.query.wand import (
+        wand_topk_batch,
+        wand_topk_local,
+    )
+
+    out = str(tmp_path / "idx")
+    write_index(build_index(load_corpus(spark, sf_dir), n_doc_parts=8), out)
+    # the local pass reads postings and stats (its idfs come from the
+    # posting blocks); the batch then reads term_dict for the terms the
+    # local pass did not see, and doc_map for its urls
+    queries = dict(enumerate(QUERIES + [["join", "filter"]]))
+    want_local = [wand_topk_local(read_index(spark, out), q, k=10) for q in QUERIES]
+    want_batch = wand_topk_batch(read_index(spark, out), queries, k=10).collect()
+
+    def unreadable(*args, **kwargs):
+        raise OSError("unreadable parquet footer")
+
+    monkeypatch.setattr(pads, "dataset", unreadable)
+    idx = read_index(spark, out)
+    with pytest.warns(RuntimeWarning) as rec:
+        got_local = [wand_topk_local(idx, q, k=10) for q in QUERIES]
+        got_batch = wand_topk_batch(idx, queries, k=10).collect()
+        wand_topk_batch(idx, queries, k=10).collect()
+    assert got_local == want_local
+    assert got_batch == want_batch
+    msgs = [
+        str(w.message) for w in rec if "using the Spark route" in str(w.message)
+    ]
+    tables = sorted(m.split(" table")[0].split()[-1] for m in msgs)
+    assert tables == ["doc_map", "postings", "stats", "term_dict"], msgs
+    assert all("OSError: unreadable parquet footer" in m for m in msgs)
